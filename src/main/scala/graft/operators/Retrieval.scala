@@ -82,12 +82,37 @@ object Retrieval {
   private[graft] val RrfK: Int = 60
   private[graft] val DefaultPoolK: Int = 20
 
-  /** Posting shard count of the persisted index (q129): postings are
-    * partitioned by `pmod(xxhash64(term), IndexShards)` so a serve
+  /** Posting shard geometry of the persisted index (q129): postings
+    * are partitioned by `pmod(xxhash64(term), shards)` so a serve
     * touches only the shards its query terms hash into (partition
     * pruning) while the directory count stays bounded at any
-    * vocabulary size. Stamped into the artifact. */
-  private[graft] val IndexShards: Int = 64
+    * vocabulary size. The count is sized to the corpus at build
+    * ([[suggestIndexShards]]), stamped into the artifact, and every
+    * later append, serve and compaction uses the stamp. */
+  private[graft] val MinIndexShards: Int = 4
+  private[graft] val MaxIndexShards: Int = 64
+  private[graft] val ShardTokens: Long = 1L << 20
+
+  /** Scale-derived posting shard count — the [[Dedup.suggestBandPrefixWidth]]
+    * convention applied to the lexical artifact: every build and every
+    * append writes one file per touched shard directory, and a
+    * cache-hit read lists them all (past 32 directories that listing
+    * is a Spark job of its own), so each shard must be worth a file.
+    * A power of two holding about [[ShardTokens]] corpus tokens:
+    * [[MinIndexShards]] (the floor keeps shard pruning observable on
+    * tiny corpora) up to ~4M tokens, doubling with the corpus to
+    * [[MaxIndexShards]] at ~64M tokens — the former fixed count, so
+    * no corpus writes more files per append than it did then. The
+    * count is fixed at build: appends and compaction keep the stamp,
+    * so only a rebuild re-sizes an index that has grown. */
+  private[graft] def suggestIndexShards(lTokens: Long): Int = {
+    var s = MinIndexShards
+    while (s < MaxIndexShards && lTokens > s * ShardTokens) s <<= 1
+    s
+  }
+
+  private def shardOf(term: org.apache.spark.sql.Column, shards: Int) =
+    pmod(xxhash64(term), lit(shards))
 
   private def toks = split(col("text"), " ")
 
@@ -233,17 +258,21 @@ object Retrieval {
     *
     * Layout under `path`:
     *  - `postings/` — (doc_id, term, tf, dl), partitioned by
-    *    `_p_shard = pmod(xxhash64(term), IndexShards)`: a serve
-    *    touches ONLY the shards its query terms hash into (partition
-    *    pruning, spec-pinned), the distributed analogue of reading
-    *    just the query terms' posting lists.
+    *    `_p_shard = pmod(xxhash64(term), shards)`: a serve touches
+    *    ONLY the shards its query terms hash into (partition pruning,
+    *    spec-pinned), the distributed analogue of reading just the
+    *    query terms' posting lists. `shards` is sized to the corpus
+    *    from the pinned stats row ([[suggestIndexShards]] — no extra
+    *    job).
     *  - `lexicon/` — (term, df, idf_q): the vocabulary-scale idf is
     *    paid ONCE at build; serves broadcast only their query slice.
     *  - `stats/` — one row (n_docs, avgdl_q) + parameter stamps
     *    (_p_fbits, _p_shards): an index built under different score
-    *    arithmetic or shard geometry fails LOUD at read (the
-    *    readSemanticStore guard discipline — a stale-stamp index
-    *    would silently mis-rank or mis-prune).
+    *    arithmetic fails LOUD at read (the readSemanticStore guard
+    *    discipline — a stale-stamp index would silently mis-rank), and
+    *    the shard stamp is the geometry every later append, serve and
+    *    compaction uses, so indexes built at any count (the fixed 64
+    *    of earlier builds included) stay servable.
     *
     * The df cap stays a SERVE-time policy (the artifact is complete;
     * `maxDfPpm` filters the broadcast lexicon slice), so one index
@@ -251,21 +280,33 @@ object Retrieval {
   def writeBm25Index(documents: DataFrame, path: String): Unit = {
     ArtifactCache.invalidate(bm25CacheKey(path)) // rebuild = new state
     val tfd = postingsFrame(documents).localCheckpoint()
+    // ONE stats aggregation, pinned (r19): the 1-row frame feeds the
+    // shard sizing, the lexicon's idf crossJoin and the stats leg —
+    // un-pinned it re-aggregated the postings per consumer. The
+    // 1-row collect reads the pinned row, not a re-aggregation.
+    val st = statsFrame(tfd).localCheckpoint()
+    val sr = st.collect().head
+    val shards = suggestIndexShards(sr.getAs[Long]("l_tokens"))
+    // the FIRST destructive step retracts the old commit point: a
+    // rebuild that dies after its postings overwrite would otherwise
+    // leave the old stats stamp (say 64 shards, epoch 0) over postings
+    // of the new geometry at the same epoch — every check passes and
+    // serves silently probe shards that do not exist. With no stats,
+    // readBm25Index fails loud until the rebuild is re-run.
+    val statsDir = new org.apache.hadoop.fs.Path(s"$path/stats")
+    statsDir.getFileSystem(documents.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(statsDir, true)
     // postings and lexicon are INDEPENDENT legs over the pinned tfd
     // into different directories, both ahead of the stats commit point
     // — overlap them (guide §2.6; r20): a crash with either leg
     // missing/partial is the same pre-commit torn state the epoch
     // cross-checks already refuse
     val postingsF = concurrent.Future {
-      tfd.withColumn("_p_shard", pmod(xxhash64(col("term")), lit(IndexShards)))
+      tfd.withColumn("_p_shard", shardOf(col("term"), shards))
         .withColumn("_b_epoch", lit(0L))
         .write.mode("overwrite").partitionBy("_p_shard", "_b_epoch")
         .parquet(s"$path/postings")
     }(concurrent.ExecutionContext.global)
-    // ONE stats aggregation, pinned (r19): the 1-row frame feeds both
-    // the lexicon's idf crossJoin and the stats leg — un-pinned it
-    // re-aggregated the postings per consumer
-    val st = statsFrame(tfd).localCheckpoint()
     tfd.groupBy("term").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(st))
       .withColumn("idf_q", expr(idfExpr))
@@ -275,19 +316,18 @@ object Retrieval {
     concurrent.Await.result(postingsF, concurrent.duration.Duration.Inf)
     st
       .withColumn("_p_fbits", lit(Bm25FBits))
-      .withColumn("_p_shards", lit(IndexShards))
+      .withColumn("_p_shards", lit(shards))
       .withColumn("_p_epoch", lit(0L))
       .withColumn("_p_batch_id", lit(-1L))
       .write.mode("overwrite").parquet(s"$path/stats")
     // stats is the LAST leg written = the commit point — install the
     // build's own state so the first read (the very next append or
-    // serve) skips revalidating what this build just wrote (r20; the
-    // 1-row collect is on the pinned stats frame, not a re-aggregation)
-    val sr = st.collect().head
+    // serve) skips revalidating what this build just wrote (r20)
     ArtifactCache.install(documents.sparkSession, bm25CacheKey(path),
       bm25FpDirs(path),
       Bm25Meta(sr.getAs[Long]("n_docs"), sr.getAs[Long]("l_tokens"),
-        sr.getAs[Long]("max_dl"), sr.getAs[Long]("avgdl_q"), 0L, -1L))
+        sr.getAs[Long]("max_dl"), sr.getAs[Long]("avgdl_q"), 0L, -1L,
+        shards))
   }
 
   /** Validated index handle: loud on missing pieces, mixed or drifted
@@ -297,10 +337,12 @@ object Retrieval {
     * `epoch` is the index's mutation counter ([[appendBm25Index]]
     * bumps it; the EPOCH AGREEMENT of all three legs is what
     * [[readBm25Index]] verifies); `batchId` is the last STREAMING
-    * batch applied (s23's replay fence; -1 = none). */
+    * batch applied (s23's replay fence; -1 = none). `shards` is the
+    * stamped posting shard count the postings were written with. */
   final case class Bm25Index(postings: DataFrame, lexicon: DataFrame,
                              nDocs: Long, lTokens: Long, maxDl: Long,
-                             avgdlQ: Long, epoch: Long, batchId: Long)
+                             avgdlQ: Long, epoch: Long, batchId: Long,
+                             shards: Int)
 
   /** Read + validate. Beyond the geometry stamps, this is the TORN-
     * APPEND detector (r17 ADVICE): an append mutates three legs
@@ -326,7 +368,7 @@ object Retrieval {
     * inference/footer jobs — absent right after a build, captured and
     * re-installed on the first hit). */
   private final case class Bm25Meta(nDocs: Long, lTokens: Long, maxDl: Long,
-      avgdlQ: Long, epoch: Long, batchId: Long,
+      avgdlQ: Long, epoch: Long, batchId: Long, shards: Int,
       postingsSchema: Option[org.apache.spark.sql.types.StructType] = None,
       lexiconSchema: Option[org.apache.spark.sql.types.StructType] = None)
   private def bm25CacheKey(path: String) = s"bm25:$path"
@@ -360,8 +402,13 @@ object Retrieval {
           m.copy(postingsSchema = Some(postings.schema),
             lexiconSchema = Some(lexicon.schema)))
       return Bm25Index(postings, lexicon,
-        m.nDocs, m.lTokens, m.maxDl, m.avgdlQ, m.epoch, m.batchId)
+        m.nDocs, m.lTokens, m.maxDl, m.avgdlQ, m.epoch, m.batchId, m.shards)
     }
+    val statsDir = new org.apache.hadoop.fs.Path(s"$path/stats")
+    require(statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(statsDir),
+      s"bm25 index at $path has no stats commit point — a build died " +
+        "before committing (or the path holds no index); rebuild the index")
     val stats = spark.read.parquet(s"$path/stats").collect()
     require(stats.length == 1,
       s"bm25 index at $path: stats must be ONE row, got ${stats.length}")
@@ -370,18 +417,29 @@ object Retrieval {
       s"bm25 index at $path was built with ${st.getAs[Int]("_p_fbits")} " +
         s"fractional idf bits, this library scores with $Bm25FBits — " +
         "stored idf_q would silently mis-rank; rebuild the index")
-    require(st.getAs[Int]("_p_shards") == IndexShards,
-      s"bm25 index at $path was sharded at ${st.getAs[Int]("_p_shards")}, " +
-        s"caller prunes at $IndexShards — shard pruning would drop " +
-        "posting lists and fail open; rebuild the index")
+    val shards = st.getAs[Int]("_p_shards")
     val epoch = st.getAs[Long]("_p_epoch")
     val postings = spark.read.parquet(s"$path/postings")
     require(Set("doc_id", "term", "tf", "dl", "_p_shard", "_b_epoch")
       .subsetOf(postings.columns.toSet),
       s"bm25 index at $path: postings lack expected columns, got " +
         postings.columns.mkString(", "))
-    // cast: partition-column type inference narrows small values to int
-    val maxBe = postings.agg(max(col("_b_epoch").cast("long"))).head().getLong(0)
+    // cast: partition-column type inference narrows small values to int.
+    // The shard bounds ride the same partition-column aggregate (no
+    // extra job): a _p_shard= directory outside [0, stamp) means the
+    // postings were written at another geometry than the stamp says,
+    // and a serve pruning at the stamp would drop posting lists. The
+    // check is one-sided (a small corpus need not fill every shard); a
+    // stamp ABOVE the written geometry could only come from a rebuild
+    // that died before its commit, and a rebuild retracts the old
+    // stats first, so that state reads as a missing commit point
+    val pb = postings.agg(max(col("_b_epoch").cast("long")),
+      min(col("_p_shard").cast("long")), max(col("_p_shard").cast("long"))).head()
+    require(shards > 0 && pb.getLong(1) >= 0 && pb.getLong(2) < shards,
+      s"bm25 index at $path is stamped at $shards posting shards but its " +
+        s"_p_shard= directories span [${pb.getLong(1)}, ${pb.getLong(2)}] — " +
+        "shard pruning would drop posting lists and fail open; rebuild the index")
+    val maxBe = pb.getLong(0)
     require(maxBe == epoch,
       s"bm25 index at $path is TORN: postings carry epoch $maxBe but " +
         s"stats committed epoch $epoch — an append crashed between the " +
@@ -410,10 +468,10 @@ object Retrieval {
     val idx = Bm25Index(postings, lexicon,
       st.getAs[Long]("n_docs"), st.getAs[Long]("l_tokens"),
       st.getAs[Long]("max_dl"), st.getAs[Long]("avgdl_q"),
-      epoch, st.getAs[Long]("_p_batch_id"))
+      epoch, st.getAs[Long]("_p_batch_id"), shards)
     ArtifactCache.install(spark, bm25CacheKey(path), bm25FpDirs(path),
       Bm25Meta(idx.nDocs, idx.lTokens, idx.maxDl, idx.avgdlQ,
-        idx.epoch, idx.batchId,
+        idx.epoch, idx.batchId, shards,
         Some(postings.schema), Some(lexicon.schema)))
     idx
   }
@@ -454,11 +512,14 @@ object Retrieval {
     * merged lexicon through the [[graft.operators.Dedup.compactSwap]]
     * write→validate→rename choreography, stamped E+1; (3) stats LAST
     * — the commit point — through the same choreography, epoch E+1.
-    * A crash between any two steps leaves legs at different epochs,
-    * which [[readBm25Index]] detects and refuses to serve (fail loud,
-    * never silently mis-score). The swap choreography additionally
-    * leaves a `__precompact` recovery copy so no crash window is
-    * destructive.
+    * The postings leg is AWAITED before the lexicon swap, the first
+    * destructive step: a postings write that fails leaves lexicon and
+    * stats untouched (the pre-append state, still servable — re-run
+    * the append). A crash between any two later steps leaves legs at
+    * different epochs, which [[readBm25Index]] detects and refuses to
+    * serve (fail loud, never silently mis-score). The swap
+    * choreography additionally leaves a `__precompact` recovery copy
+    * so no crash window is destructive.
     *
     * Replay idempotency (r17 ADVICE): `batchId` is the streaming
     * intake's fence — foreachBatch is at-least-once, and a restart
@@ -501,12 +562,12 @@ object Retrieval {
         "fixed-point contribution would wrap; truncate pathological " +
         "documents or narrow Bm25FBits")
     val newEpoch = idx.epoch + 1L
-    // the batch's postings append and the lexicon merge are independent
-    // work over the pinned tfd, both ahead of the stats commit point —
-    // overlap them (guide §2.6; r20). Awaited before the stats swap:
-    // the commit order's only load-bearing edge is "stats LAST".
+    // the batch's postings append and the merged-lexicon materialization
+    // are independent work over the pinned tfd — overlap them (guide
+    // §2.6; r20). The postings land at the index's STAMPED geometry,
+    // whatever the corpus has grown to since the build.
     val postingsF = concurrent.Future {
-      tfd.withColumn("_p_shard", pmod(xxhash64(col("term")), lit(IndexShards)))
+      tfd.withColumn("_p_shard", shardOf(col("term"), idx.shards))
         .withColumn("_b_epoch", lit(newEpoch))
         .write.mode("append").partitionBy("_p_shard", "_b_epoch")
         .parquet(s"$path/postings")
@@ -526,6 +587,10 @@ object Retrieval {
       .withColumn("_l_epoch", lit(newEpoch))
       .localCheckpoint(false)
     val wantTerms = mergedLex.count()
+    // the lexicon swap is the first DESTRUCTIVE step: the postings leg
+    // must have landed before it, so a failed postings write throws
+    // here with lexicon and stats untouched
+    concurrent.Await.result(postingsF, concurrent.duration.Duration.Inf)
     Dedup.compactSwap(spark, s"$path/lexicon", what = "bm25 lexicon")(tmp =>
       mergedLex.write.mode("overwrite").parquet(tmp)
     ) { tmp =>
@@ -544,13 +609,11 @@ object Retrieval {
           "readBm25Index will refuse it. Rebuild, or restore the " +
           "lexicon/stats __precompact recovery copies and re-run the append")
     }
-    // both pre-commit legs must be fully landed before the commit point
-    concurrent.Await.result(postingsF, concurrent.duration.Duration.Inf)
     import spark.implicits._
     val newStats = Seq((nDocs, lTokens, maxDl, avgdlQ))
       .toDF("n_docs", "l_tokens", "max_dl", "avgdl_q")
       .withColumn("_p_fbits", lit(Bm25FBits))
-      .withColumn("_p_shards", lit(IndexShards))
+      .withColumn("_p_shards", lit(idx.shards))
       .withColumn("_p_epoch", lit(newEpoch))
       .withColumn("_p_batch_id", lit(batchId.getOrElse(idx.batchId)))
     Dedup.compactSwap(spark, s"$path/stats", what = "bm25 stats")(tmp =>
@@ -569,7 +632,7 @@ object Retrieval {
     // skips revalidation of a state this append just proved
     ArtifactCache.install(spark, bm25CacheKey(path), bm25FpDirs(path),
       Bm25Meta(nDocs, lTokens, maxDl, avgdlQ, newEpoch,
-        batchId.getOrElse(idx.batchId),
+        batchId.getOrElse(idx.batchId), idx.shards,
         Some(idx.postings.schema), Some(idx.lexicon.schema)))
     Some(Bm25IngestHealth(nDocs, lTokens, avgdlQ, wantTerms))
   }
@@ -652,7 +715,7 @@ object Retrieval {
     import spark.implicits._
     val qtRows = queries
       .select(col("query_id"), explode(toks).as("term")).distinct()
-      .withColumn("sh", pmod(xxhash64(col("term")), lit(IndexShards)))
+      .withColumn("sh", shardOf(col("term"), index.shards))
       .collect()
     val shards = qtRows.map(_.getLong(2)).distinct.toSeq
     val qterms = qtRows.map(r => (r.getLong(0), r.getString(1))).toSeq

@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   *    count rows in-process, a distributed engine must piggyback on the
   *    job that already flowed the rows).
   *  - `input_files` / `output_files` / `output_bytes` are filesystem
-  *    metadata operations — O(files), never O(rows).
+  *    metadata operations — O(files), never O(rows). The output pair
+  *    counts the files THIS write committed (a listing before and
+  *    after), so appends into one root never claim earlier runs.
   *  - A report row is a few hundred bytes; the report table for a year
   *    of hourly runs is <10k rows. Querying it is driver-trivial, so
   *    the analytics path reuses the ordinary event-log operators
@@ -70,6 +72,8 @@ object RunReport {
                     environment: String = "local",
                     runId: Option[String] = None): Run = {
     val spark = df.sparkSession
+    // listed ahead of the clock, so duration_seconds times the write
+    val before = dataFiles(spark, path)
     val started = System.currentTimeMillis()
     val id = runId.getOrElse(jobName + "-" + java.util.UUID.randomUUID().toString)
     val inputFiles = df.inputFiles.length.toLong
@@ -83,14 +87,16 @@ object RunReport {
         case e: Exception => Left(e)
       }
     val finished = System.currentTimeMillis()
-    val (files, bytes) = outputStats(spark, path)
+    // every Spark write names its files afresh, so the new paths are
+    // exactly the files this write committed
+    val added = dataFiles(spark, path) -- before.keySet
     val run = Run(
       job_name = jobName, run_id = id,
       started_at = new Timestamp(started), finished_at = new Timestamp(finished),
       duration_seconds = (finished - started) / 1000.0,
       input_files = inputFiles,
       records_processed = attempt.getOrElse(0L),
-      output_files = files, output_bytes = bytes,
+      output_files = added.size.toLong, output_bytes = added.values.sum,
       status = if (attempt.isRight) "SUCCESS" else "FAILED",
       error_message = attempt.left.toOption.map(e =>
         e.toString.linesIterator.next().take(500)),
@@ -109,26 +115,26 @@ object RunReport {
       .coalesce(1).write.mode(SaveMode.Append).parquet(reportDir)
   }
 
-  /** Count + total size of the data files under `path` (recursive;
-    * commit markers and hidden files excluded). Filesystem metadata
-    * only. */
-  private def outputStats(spark: SparkSession, path: String): (Long, Long) = {
+  /** Length of every data file under `path`, keyed by path
+    * (recursive; commit markers and hidden files excluded) —
+    * filesystem metadata only. Listed before and after the write, the
+    * difference is exactly the files the write committed: an append
+    * into a root that already holds earlier runs' files reports only
+    * its own (one writer per output root, the reference's contract). */
+  private def dataFiles(spark: SparkSession, path: String): Map[String, Long] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) (0L, 0L)
+    if (!fs.exists(p)) Map.empty
     else {
       val it = fs.listFiles(p, true)
-      var files = 0L
-      var bytes = 0L
+      val out = Map.newBuilder[String, Long]
       while (it.hasNext) {
         val f = it.next()
         val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          files += 1L
-          bytes += f.getLen
-        }
+        if (!name.startsWith("_") && !name.startsWith("."))
+          out += f.getPath.toString -> f.getLen
       }
-      (files, bytes)
+      out.result()
     }
   }
 

@@ -520,8 +520,10 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batch.limit(1).count() > 0) {
-          val b = batch.localCheckpoint() // pin BEFORE the index mutation
+        // pin BEFORE the index mutation; the lazy pin's count is the
+        // one source scan of the batch and doubles as the empty test
+        val b = batch.localCheckpoint(false)
+        if (b.count() > 0) {
           // r20: the applied append RETURNS the health row's numbers
           // (its own associative merges + the validated merged-lexicon
           // count) — re-reading and re-counting the artifact it just
@@ -622,8 +624,10 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batch.limit(1).count() > 0) {
-          val b = batch.localCheckpoint() // pin BEFORE the index mutation
+        // pin BEFORE the index mutation; the lazy pin's count is the
+        // one source scan of the batch and doubles as the empty test
+        val b = batch.localCheckpoint(false)
+        if (b.count() > 0) {
           val h = graft.operators.Similarity
             .appendAnnIndex(spark, b, indexPath, batchId = Some(batchId))
             .getOrElse {

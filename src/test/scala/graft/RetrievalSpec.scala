@@ -4,6 +4,21 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+/** A commit protocol that lets a write commit its files, then fails
+  * the job — a process dying right after one leg of a multi-leg
+  * artifact landed. Armed for ONE output path via [[CrashAfterCommit.at]]. */
+class CrashAfterCommit(jobId: String, path: String, dpo: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dpo) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+      taskCommits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit = {
+    super.commitJob(job, taskCommits)
+    if (CrashAfterCommit.at.exists(path.endsWith))
+      throw new java.io.IOException(s"injected crash after committing $path")
+  }
+}
+object CrashAfterCommit { @volatile var at: Option[String] = None }
+
 /** q127 BM25 / q128 RRF laws: the integer score against an
   * independent reimplementation (Long.numberOfLeadingZeros bit length
   * vs the plan's bin()-string length), the df cap, the two-stage
@@ -140,6 +155,7 @@ class RetrievalSpec extends SparkSpec {
         f.selectedPartitions.partitionCount
     }
     scans should not be empty
+    written should be >= 2 // pruning is only observable across shards
     scans.max should be < written
     // arithmetic unchanged under pruning: apple carriers rank by tf/dl
     served.select("doc_id").collect().map(_.getLong(0)).toSet shouldBe
@@ -164,12 +180,7 @@ class RetrievalSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     lex(inc) shouldBe lex(full)
     // the serve: row-identical over the q127 query set
-    def serve(i: Retrieval.Bm25Index) = Retrieval.bm25ServeIndex(i,
-        docsAll.filter(col("doc_id") < 10)
-          .select(col("doc_id").as("query_id"), col("text")),
-        excludeId = true)
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    serve(inc) shouldBe serve(full)
+    serveRows(inc, docsAll) shouldBe serveRows(full, docsAll)
   }
 
   test("bm25 postings compaction: fewer files, serve identical, stamps survive") {
@@ -177,12 +188,7 @@ class RetrievalSpec extends SparkSpec {
     val docsAll = tables.documents
     Retrieval.writeBm25Index(docsAll.filter(col("doc_id") % 10 =!= 9), s"$base/idx")
     Retrieval.appendBm25Index(spark, docsAll.filter(col("doc_id") % 10 === 9), s"$base/idx")
-    def serve() = Retrieval.bm25ServeIndex(
-        Retrieval.readBm25Index(spark, s"$base/idx"),
-        docsAll.filter(col("doc_id") < 10)
-          .select(col("doc_id").as("query_id"), col("text")),
-        excludeId = true)
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    def serve() = serveRows(Retrieval.readBm25Index(spark, s"$base/idx"), docsAll)
     val before = serve()
     val (fb, fa) = Retrieval.compactBm25Index(spark, s"$base/idx")
     fa should be < fb // the append's per-shard file growth collapses
@@ -226,12 +232,13 @@ class RetrievalSpec extends SparkSpec {
   test("torn append fails loud at read: orphan postings beyond the stats epoch") {
     val base = java.nio.file.Files.createTempDirectory("bm25_torn1").toString
     Retrieval.writeBm25Index(corpus, s"$base/idx")
+    val shards = Retrieval.readBm25Index(spark, s"$base/idx").shards
     // simulate a crash AFTER the postings append, BEFORE the
     // lexicon/stats swap: batch postings at epoch 1 land, stats stay 0
     import spark.implicits._
     Seq((99L, "orphan", 1L, 1L))
       .toDF("doc_id", "term", "tf", "dl")
-      .withColumn("_p_shard", pmod(xxhash64(col("term")), lit(64)))
+      .withColumn("_p_shard", pmod(xxhash64(col("term")), lit(shards)))
       .withColumn("_b_epoch", lit(1L))
       .write.mode("append").partitionBy("_p_shard", "_b_epoch")
       .parquet(s"$base/idx/postings")
@@ -421,5 +428,194 @@ class RetrievalSpec extends SparkSpec {
     val hit = Retrieval.readBm25Index(spark, s"$base/idx")
     hit.nDocs shouldBe warm.nDocs + 1
     hit.epoch shouldBe warm.epoch + 1
+  }
+
+  private def shardDirs(postings: String): Seq[Int] =
+    new java.io.File(postings).listFiles().toSeq.map(_.getName)
+      .filter(_.startsWith("_p_shard=")).map(_.stripPrefix("_p_shard=").toInt)
+
+  private def serveRows(i: Retrieval.Bm25Index, docsAll: DataFrame) =
+    Retrieval.bm25ServeIndex(i,
+        docsAll.filter(col("doc_id") < 10)
+          .select(col("doc_id").as("query_id"), col("text")),
+        excludeId = true)
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq
+
+  /** Rewrite a built index into the fixed 64-shard layout every index
+    * had before shard counts were sized to the corpus: postings
+    * re-partitioned at 64, stats stamped 64. */
+  private def asLegacy64(path: String): Unit = {
+    spark.read.parquet(s"$path/postings")
+      .withColumn("_p_shard", pmod(xxhash64(col("term")), lit(64)))
+      .localCheckpoint()
+      .write.mode("overwrite").partitionBy("_p_shard", "_b_epoch")
+      .parquet(s"$path/postings")
+    spark.read.parquet(s"$path/stats")
+      .withColumn("_p_shards", lit(64)).localCheckpoint()
+      .write.mode("overwrite").parquet(s"$path/stats")
+  }
+
+  /** Spark jobs started while `body` runs. Listener delivery is
+    * asynchronous but FIFO, so a marked fence job submitted afterwards
+    * is seen only once every job of `body` has been counted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("graft.fence") != null))
+          fenced.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      sc.setLocalProperty("graft.fence", "1")
+      try spark.range(1).count() finally sc.setLocalProperty("graft.fence", null)
+      fenced.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("bm25 shard count: a power of two sized to the corpus, floor to cap") {
+    Retrieval.suggestIndexShards(0L) shouldBe Retrieval.MinIndexShards
+    Retrieval.suggestIndexShards(4L * Retrieval.ShardTokens) shouldBe 4
+    Retrieval.suggestIndexShards(4L * Retrieval.ShardTokens + 1) shouldBe 8
+    Retrieval.suggestIndexShards(64L * Retrieval.ShardTokens) shouldBe 64
+    // capped at the former fixed count: no corpus writes more files per
+    // append than every index did before shards were sized
+    Retrieval.MaxIndexShards shouldBe 64
+    Retrieval.suggestIndexShards(Long.MaxValue) shouldBe 64
+    (0 to 40).map(b => Retrieval.suggestIndexShards(1L << b))
+      .foreach(s => Integer.bitCount(s) shouldBe 1)
+  }
+
+  test("bm25 geometry: a small corpus builds at the floor, the stamp equals the shard directories, appends keep it") {
+    val base = java.nio.file.Files.createTempDirectory("bm25_geom").toString
+    val docsAll = tables.documents
+    Retrieval.writeBm25Index(docsAll.filter(col("doc_id") % 10 =!= 9), s"$base/idx")
+    val idx = Retrieval.readBm25Index(spark, s"$base/idx")
+    idx.shards shouldBe Retrieval.MinIndexShards
+    spark.read.parquet(s"$base/idx/stats").head().getAs[Int]("_p_shards") shouldBe idx.shards
+    shardDirs(s"$base/idx/postings").sorted shouldBe (0 until idx.shards)
+    Retrieval.appendBm25Index(spark, docsAll.filter(col("doc_id") % 10 === 9), s"$base/idx")
+    val app = Retrieval.readBm25Index(spark, s"$base/idx")
+    app.shards shouldBe idx.shards
+    spark.read.parquet(s"$base/idx/stats").head().getAs[Int]("_p_shards") shouldBe idx.shards
+    shardDirs(s"$base/idx/postings").sorted shouldBe (0 until idx.shards)
+  }
+
+  test("bm25 legacy 64-shard index reads, appends, serves and compacts row-identically to a rebuild") {
+    val base = java.nio.file.Files.createTempDirectory("bm25_legacy").toString
+    val docsAll = tables.documents
+    Retrieval.writeBm25Index(docsAll.filter(col("doc_id") % 10 =!= 9), s"$base/old")
+    asLegacy64(s"$base/old")
+    val old = Retrieval.readBm25Index(spark, s"$base/old")
+    old.shards shouldBe 64
+    Retrieval.writeBm25Index(docsAll.filter(col("doc_id") % 10 =!= 9), s"$base/part")
+    serveRows(old, docsAll) shouldBe
+      serveRows(Retrieval.readBm25Index(spark, s"$base/part"), docsAll)
+    // the append lands at the stamped 64, not at the corpus-derived count
+    Retrieval.appendBm25Index(spark, docsAll.filter(col("doc_id") % 10 === 9), s"$base/old")
+    val app = Retrieval.readBm25Index(spark, s"$base/old")
+    app.shards shouldBe 64
+    shardDirs(s"$base/old/postings").max should be < 64
+    shardDirs(s"$base/old/postings").size should be > Retrieval.MinIndexShards
+    Retrieval.writeBm25Index(docsAll, s"$base/full")
+    val full = Retrieval.readBm25Index(spark, s"$base/full")
+    (app.nDocs, app.lTokens, app.maxDl, app.avgdlQ) shouldBe
+      ((full.nDocs, full.lTokens, full.maxDl, full.avgdlQ))
+    val want = serveRows(full, docsAll)
+    serveRows(app, docsAll) shouldBe want
+    val (fb, fa) = Retrieval.compactBm25Index(spark, s"$base/old")
+    fa should be <= fb
+    val cmp = Retrieval.readBm25Index(spark, s"$base/old")
+    cmp.shards shouldBe 64
+    serveRows(cmp, docsAll) shouldBe want
+  }
+
+  test("bm25 read fails loud when the shard stamp disagrees with the directories") {
+    val base = java.nio.file.Files.createTempDirectory("bm25_geomdrift").toString
+    Retrieval.writeBm25Index(tables.documents, s"$base/idx")
+    shardDirs(s"$base/idx/postings").max should be >= 2
+    spark.read.parquet(s"$base/idx/stats")
+      .withColumn("_p_shards", lit(2)).localCheckpoint()
+      .write.mode("overwrite").parquet(s"$base/idx/stats")
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.readBm25Index(spark, s"$base/idx")
+    }
+    e.getMessage should include("stamped at 2 posting shards")
+  }
+
+  test("bm25 rebuild that dies after its postings commit fails loud at read, not over the old stamp") {
+    val base = java.nio.file.Files.createTempDirectory("bm25_rebuildcrash").toString
+    val docsAll = tables.documents
+    Retrieval.writeBm25Index(docsAll, s"$base/idx")
+    asLegacy64(s"$base/idx") // stamp 64, epoch 0
+    val conf = "spark.sql.sources.commitProtocolClass"
+    val prior = spark.conf.getOption(conf)
+    spark.conf.set(conf, classOf[CrashAfterCommit].getName)
+    CrashAfterCommit.at = Some(s"$base/idx/postings")
+    try intercept[Exception] { Retrieval.writeBm25Index(docsAll, s"$base/idx") }
+    finally {
+      CrashAfterCommit.at = None
+      prior.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+    }
+    // the rebuild's postings landed at the corpus-sized geometry, epoch
+    // 0; a surviving 64 stamp at epoch 0 would pass every epoch check
+    // and the serve would probe shards that were never written
+    shardDirs(s"$base/idx/postings").max should be < Retrieval.MinIndexShards
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.readBm25Index(spark, s"$base/idx")
+    }
+    e.getMessage should include("no stats commit point")
+    // re-running the rebuild recovers
+    Retrieval.writeBm25Index(docsAll, s"$base/idx")
+    Retrieval.readBm25Index(spark, s"$base/idx").shards shouldBe Retrieval.MinIndexShards
+  }
+
+  test("bm25 cache-hit read of a small index runs zero Spark jobs") {
+    val base = java.nio.file.Files.createTempDirectory("bm25_hitjobs").toString
+    // a wide vocabulary, so the legacy layout below fills > 32 shard
+    // directories (Spark lists more than that with a parallel job)
+    Retrieval.writeBm25Index(
+      docs((0 until 300).map(i => i.toLong -> s"w$i x${i % 7}"): _*), s"$base/idx")
+    Retrieval.readBm25Index(spark, s"$base/idx") // first hit captures the schemas
+    val (hit, jobs) = jobsDuring(Retrieval.readBm25Index(spark, s"$base/idx"))
+    jobs shouldBe 0
+    hit.shards shouldBe Retrieval.MinIndexShards
+    // the same hit read over the 64 legacy shard directories pays a
+    // parallel partition-listing job: the counter sees jobs that run
+    asLegacy64(s"$base/idx")
+    shardDirs(s"$base/idx/postings").size should be > 32
+    Retrieval.readBm25Index(spark, s"$base/idx")
+    jobsDuring(Retrieval.readBm25Index(spark, s"$base/idx"))._2 should be > 0
+  }
+
+  test("bm25 append: a failed postings leg leaves lexicon and stats untouched") {
+    val base = java.nio.file.Files.createTempDirectory("bm25_postfail").toString
+    val docsAll = tables.documents
+    Retrieval.writeBm25Index(docsAll.filter(col("doc_id") % 10 =!= 9), s"$base/idx")
+    val pre = Retrieval.readBm25Index(spark, s"$base/idx")
+    def lex(i: Retrieval.Bm25Index) = i.lexicon.collect().map(_.toSeq).toSet
+    val preLex = lex(pre)
+    val preStats = spark.read.parquet(s"$base/idx/stats").collect().toSeq
+    // a plain file where the postings writer stages its job blocks the
+    // postings leg (readers skip the hidden name)
+    val blocker = new java.io.File(s"$base/idx/postings/_temporary")
+    java.nio.file.Files.write(blocker.toPath, Array[Byte](1))
+    intercept[Exception] {
+      Retrieval.appendBm25Index(spark, docsAll.filter(col("doc_id") % 10 === 9), s"$base/idx")
+    }
+    blocker.delete() shouldBe true
+    val after = Retrieval.readBm25Index(spark, s"$base/idx")
+    (after.epoch, after.nDocs, after.lTokens) shouldBe ((pre.epoch, pre.nDocs, pre.lTokens))
+    lex(after) shouldBe preLex
+    spark.read.parquet(s"$base/idx/stats").collect().toSeq shouldBe preStats
+    // and the append re-runs cleanly
+    Retrieval.appendBm25Index(spark, docsAll.filter(col("doc_id") % 10 === 9), s"$base/idx")
+    Retrieval.readBm25Index(spark, s"$base/idx").epoch shouldBe pre.epoch + 1
   }
 }

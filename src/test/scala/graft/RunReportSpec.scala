@@ -7,6 +7,8 @@ import graft.sources.RunReport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import scala.jdk.CollectionConverters._
+
 /** Run-report emission (q56) — the reference's self-describing JSON run
   * logs (lambda/glue report sections, queried by Athena.sql:104-176) as
   * a Spark sink wrapper: metric correctness, the failure path, the
@@ -36,6 +38,31 @@ class RunReportSpec extends SparkSpec {
     back.length shouldBe 1
     back.head.getAs[String]("job_name") shouldBe "docs_ingest"
     back.head.getAs[Long]("records_processed") shouldBe n
+  }
+
+  test("q56 appends into one root: each report counts only its own run's files") {
+    val dir = tmp("graft_rr_append")
+    def files(): Map[String, Long] = {
+      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/out"))
+      try it.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .filterNot(p => Seq("_", ".").exists(p.getFileName.toString.startsWith))
+        .map(p => p.toString -> java.nio.file.Files.size(p)).toMap
+      finally it.close()
+    }
+    val r1 = RunReport.reportedWrite(
+      tables.documents, s"$dir/out", 3, "docs_ingest", s"$dir/reports")
+    val first = files()
+    r1.output_files shouldBe 3L
+    r1.output_bytes shouldBe first.values.sum
+    val r2 = RunReport.reportedWrite(
+      tables.documents, s"$dir/out", 2, "docs_ingest", s"$dir/reports")
+    val added = files() -- first.keySet
+    added.size shouldBe 2
+    r2.output_files shouldBe 2L
+    r2.output_bytes shouldBe added.values.sum
+    // the report table carries the per-run counts, not running totals
+    RunReport.readReports(spark, s"$dir/reports").collect()
+      .map(_.getAs[Long]("output_files")).sorted shouldBe Array(2L, 3L)
   }
 
   test("q56 the logs/ JSON round trip: one JSON per run, read back identical to the parquet table") {

@@ -2,6 +2,7 @@
 """Local replica of the driver's DuckDB correctness gate.
 
 Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir> [artifact.json]
+       python3 tools/check_oracle.py <verify_out_dir> --against <other_verify_out_dir>
 
 Reads <out>/oracle_sql.json, registers each test table as a DuckDB view
 over <sf_dir>/<name>.parquet, runs every oracle, loads the matching
@@ -17,6 +18,12 @@ driver artifact can never again leave a round unadjudicable. Per-query
 DuckDB wall times double as the oracle COST instrument (the sf0.01
 replay ran ~25 min in r16; a time-budgeted harness is the suspected
 cause of the empty driver gate).
+
+With --against, no oracle runs: every query output of the first dump is
+compared with the same query's output in the second dump under the same
+canonical ordering, and must be equal value for value. Run Verify twice
+on one SF at two SPARK_GRAFT_CPUS values and compare the dumps: outputs
+must not depend on core count or partitioning.
 """
 import json
 import math
@@ -53,7 +60,39 @@ def norm(v):
     return v
 
 
+def load(con, out_dir, name):
+    df = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
+    return canon(df.fetchall(), [d[0] for d in df.description])
+
+
+def against(out_dir, other_dir):
+    con = duckdb.connect()
+    names = sorted(set(json.load(open(f"{out_dir}/oracle_sql.json"))) |
+                   set(json.load(open(f"{other_dir}/oracle_sql.json"))))
+    n_pass = n_fail = 0
+    for name in names:
+        try:
+            (ac, arows), (bc, brows) = (load(con, out_dir, name),
+                                        load(con, other_dir, name))
+        except Exception as e:
+            print(f"FAIL {name}: read error: {e}")
+            n_fail += 1
+            continue
+        if ac != bc or arows != brows:
+            diff = next((i for i, (a, b) in enumerate(zip(arows, brows))
+                         if a != b), min(len(arows), len(brows)))
+            print(f"FAIL {name}: columns {ac} vs {bc}, rows {len(arows)} vs "
+                  f"{len(brows)}, first diff row {diff}")
+            n_fail += 1
+        else:
+            n_pass += 1
+    print(f"{n_pass} equal, {n_fail} differ ({out_dir} vs {other_dir})")
+    sys.exit(1 if n_fail else 0)
+
+
 def main():
+    if len(sys.argv) == 4 and sys.argv[2] == "--against":
+        against(sys.argv[1], sys.argv[3])
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
     artifact_path = sys.argv[3] if len(sys.argv) > 3 else None
     con = duckdb.connect()
