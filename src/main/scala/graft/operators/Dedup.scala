@@ -439,7 +439,7 @@ object Dedup {
     // preserve the live tree's prefix geometry (legacy trees predate
     // width detection at constant 2)
     val pfxWidth = detectBandPrefixWidth(spark, path).getOrElse(2)
-    compactSwap(spark, path, what = "index")(tmp =>
+    Artifact.swap(spark, path, what = "index")(tmp =>
       index.select(col("doc_id"), col("bk")).distinct()
         .withColumn("bk_prefix", substring(col("bk"), 1, pfxWidth))
         .select(col("*") +: stampCols(n, numHashes, bands): _*)
@@ -459,40 +459,6 @@ object Dedup {
         s"compaction of $path would lose rows ($wantRows distinct before, " +
           s"$gotRows after) — aborting with the live index untouched")
     }
-  }
-
-  /** The shared crash-safe compaction choreography for both
-    * append-grown stores: count files, rewrite to `<path>__compacting`,
-    * run the caller's validation against the rewrite, then swap via
-    * rename with `<path>__precompact` as the recovery copy (a crash
-    * before the swap leaves the live tree untouched; between the two
-    * renames, restore by renaming the precompact copy back). One
-    * implementation so a future object-store-safe rename lands once. */
-  private[operators] def compactSwap(spark: org.apache.spark.sql.SparkSession,
-                                     path: String, what: String)
-                         (writeTo: String => Unit)
-                         (validateTmp: String => Unit): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(p: String): Long = {
-      val it = fs.listFiles(new Path(p), true)
-      var c = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) c += 1 }
-      c
-    }
-    val before = dataFiles(path)
-    val tmp = s"${path}__compacting"
-    val old = s"${path}__precompact"
-    fs.delete(new Path(tmp), true); fs.delete(new Path(old), true)
-    writeTo(tmp)
-    validateTmp(tmp)
-    require(fs.rename(new Path(path), new Path(old)),
-      s"could not move live $what aside ($path -> $old)")
-    require(fs.rename(new Path(tmp), new Path(path)),
-      s"could not activate compacted $what ($tmp -> $path); " +
-        s"RECOVER by renaming $old back to $path")
-    fs.delete(new Path(old), true)
-    (before, dataFiles(path))
   }
 
   /** [[compactBandIndex]]'s sibling for s09's OTHER append-grown
@@ -517,7 +483,7 @@ object Dedup {
     val store = spark.read.parquet(path)
     val sortCols =
       if (store.columns.contains("doc_id")) Seq(col("doc_id")) else Nil
-    compactSwap(spark, path, what = "store")(tmp => {
+    Artifact.swap(spark, path, what = "store")(tmp => {
       val w = store.repartition(targetPartitions)
       (if (sortCols.nonEmpty) w.sortWithinPartitions(sortCols: _*) else w)
         .write.mode("overwrite")
@@ -525,26 +491,12 @@ object Dedup {
         .parquet(tmp)
     }) { tmp =>
       // The store feeds exact-text verification, so validate CONTENT,
-      // not just cardinality: an order-free checksum (count + SUM of
-      // per-row xxhash64, widened to decimal(38) so it can't overflow
-      // under ANSI) catches a rewrite that corrupted or swapped values
-      // even when row counts agree. Sum, not bit_xor: identical rows
-      // cancel in PAIRS under xor ({A,B,B} == {A,C,C}), and catching
-      // doc_id-uniqueness breakage is exactly this check's job. One
-      // cheap agg per side. (xxhash64 skips null arguments, so a
-      // value<->null column swap hashes alike — moot for the non-null
-      // store schema, noted for reuse.)
-      def sig(df: org.apache.spark.sql.DataFrame): (Long, java.math.BigDecimal) = {
-        val r = df.agg(
-          count(lit(1)),
-          expr(s"sum(cast(xxhash64(${df.columns.map(c => s"`$c`").mkString(", ")}) " +
-            "as decimal(38,0)))")).head()
-        (r.getLong(0),
-          if (r.isNullAt(1)) java.math.BigDecimal.ZERO
-          else r.getDecimal(1))
-      }
-      val want = sig(store)
-      val got = sig(spark.read.parquet(tmp))
+      // not just cardinality: the order-free checksum catches a rewrite
+      // that corrupted or swapped values even when row counts agree,
+      // and catching doc_id-uniqueness breakage is exactly this
+      // check's job. One cheap agg per side.
+      val want = Artifact.sig(store)
+      val got = Artifact.sig(spark.read.parquet(tmp))
       require(got == want,
         s"compaction of $path would change content ((rows, checksum) " +
           s"$want -> $got) — aborting with the live store untouched")

@@ -254,18 +254,20 @@ object Retrieval {
     * lifecycle (the q101/s08 store convention applied to lexical
     * search): build once (postings + lexicon + stats written as
     * parquet), serve many query batches against the artifact without
-    * ever re-scanning the corpus.
+    * ever re-scanning the corpus. Built, read, appended and compacted
+    * through the [[Artifact]] commit protocol.
     *
     * Layout under `path`:
-    *  - `postings/` — (doc_id, term, tf, dl), partitioned by
-    *    `_p_shard = pmod(xxhash64(term), shards)`: a serve touches
+    *  - `postings/` — the data leg, (doc_id, term, tf, dl), partitioned
+    *    by `_p_shard = pmod(xxhash64(term), shards)`: a serve touches
     *    ONLY the shards its query terms hash into (partition pruning,
     *    spec-pinned), the distributed analogue of reading just the
     *    query terms' posting lists. `shards` is sized to the corpus
     *    from the pinned stats row ([[suggestIndexShards]] — no extra
     *    job).
-    *  - `lexicon/` — (term, df, idf_q): the vocabulary-scale idf is
-    *    paid ONCE at build; serves broadcast only their query slice.
+    *  - `lexicon/` — (term, df, idf_q, _l_epoch): the vocabulary-scale
+    *    idf is paid ONCE at build; serves broadcast only their query
+    *    slice.
     *  - `stats/` — one row (n_docs, avgdl_q) + parameter stamps
     *    (_p_fbits, _p_shards): an index built under different score
     *    arithmetic fails LOUD at read (the readSemanticStore guard
@@ -278,7 +280,6 @@ object Retrieval {
     * `maxDfPpm` filters the broadcast lexicon slice), so one index
     * serves any pruning policy. */
   def writeBm25Index(documents: DataFrame, path: String): Unit = {
-    ArtifactCache.invalidate(bm25CacheKey(path)) // rebuild = new state
     val tfd = postingsFrame(documents).localCheckpoint()
     // ONE stats aggregation, pinned (r19): the 1-row frame feeds the
     // shard sizing, the lexicon's idf crossJoin and the stats leg —
@@ -287,193 +288,117 @@ object Retrieval {
     val st = statsFrame(tfd).localCheckpoint()
     val sr = st.collect().head
     val shards = suggestIndexShards(sr.getAs[Long]("l_tokens"))
-    // the FIRST destructive step retracts the old commit point: a
-    // rebuild that dies after its postings overwrite would otherwise
-    // leave the old stats stamp (say 64 shards, epoch 0) over postings
-    // of the new geometry at the same epoch — every check passes and
-    // serves silently probe shards that do not exist. With no stats,
-    // readBm25Index fails loud until the rebuild is re-run.
-    val statsDir = new org.apache.hadoop.fs.Path(s"$path/stats")
-    statsDir.getFileSystem(documents.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(statsDir, true)
-    // postings and lexicon are INDEPENDENT legs over the pinned tfd
-    // into different directories, both ahead of the stats commit point
-    // — overlap them (guide §2.6; r20): a crash with either leg
-    // missing/partial is the same pre-commit torn state the epoch
-    // cross-checks already refuse
-    val postingsF = concurrent.Future {
-      tfd.withColumn("_p_shard", shardOf(col("term"), shards))
-        .withColumn("_b_epoch", lit(0L))
-        .write.mode("overwrite").partitionBy("_p_shard", "_b_epoch")
-        .parquet(s"$path/postings")
-    }(concurrent.ExecutionContext.global)
-    tfd.groupBy("term").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(st))
-      .withColumn("idf_q", expr(idfExpr))
-      .select("term", "df", "idf_q")
-      .withColumn("_l_epoch", lit(0L))
-      .write.mode("overwrite").parquet(s"$path/lexicon")
-    concurrent.Await.result(postingsF, concurrent.duration.Duration.Inf)
-    st
-      .withColumn("_p_fbits", lit(Bm25FBits))
-      .withColumn("_p_shards", lit(shards))
-      .withColumn("_p_epoch", lit(0L))
-      .withColumn("_p_batch_id", lit(-1L))
-      .write.mode("overwrite").parquet(s"$path/stats")
-    // stats is the LAST leg written = the commit point — install the
-    // build's own state so the first read (the very next append or
-    // serve) skips revalidating what this build just wrote (r20)
-    ArtifactCache.install(documents.sparkSession, bm25CacheKey(path),
-      bm25FpDirs(path),
-      Bm25Meta(sr.getAs[Long]("n_docs"), sr.getAs[Long]("l_tokens"),
-        sr.getAs[Long]("max_dl"), sr.getAs[Long]("avgdl_q"), 0L, -1L,
-        shards))
+    // the build retracts the old stats first: a rebuild that dies after
+    // its postings overwrite reads as a missing commit point, not as
+    // the old shard stamp over postings of the new geometry
+    Artifact.build(documents.sparkSession, Bm25, path)(new Artifact.Mutation[Unit] {
+      def data = tfd.withColumn("_p_shard", shardOf(col("term"), shards))
+      def precommit(): Unit =
+        tfd.groupBy("term").agg(count(lit(1)).as("df"))
+          .crossJoin(broadcast(st))
+          .withColumn("idf_q", expr(idfExpr))
+          .select("term", "df", "idf_q")
+          .withColumn("_l_epoch", lit(0L))
+          .write.mode("overwrite").parquet(s"$path/lexicon")
+      def stats = st.withColumn("_p_fbits", lit(Bm25FBits))
+        .withColumn("_p_shards", lit(shards))
+      def meta = Bm25Meta(sr.getAs[Long]("n_docs"), sr.getAs[Long]("l_tokens"),
+        sr.getAs[Long]("max_dl"), sr.getAs[Long]("avgdl_q"), shards)
+    })
   }
 
   /** Validated index handle: loud on missing pieces, mixed or drifted
     * stamps. `nDocs`/`lTokens`/`maxDl`/`avgdlQ` are collected scalars
     * (one-row stats — the q101 centroid-table pattern); `lTokens` and
     * `maxDl` ride so an APPEND can merge stats associatively (q131).
-    * `epoch` is the index's mutation counter ([[appendBm25Index]]
-    * bumps it; the EPOCH AGREEMENT of all three legs is what
-    * [[readBm25Index]] verifies); `batchId` is the last STREAMING
-    * batch applied (s23's replay fence; -1 = none). `shards` is the
-    * stamped posting shard count the postings were written with. */
+    * `epoch` is the index's committed mutation epoch and `batchId` the
+    * last STREAMING batch applied (s23's replay fence; -1 = none).
+    * `shards` is the stamped posting shard count the postings were
+    * written with. */
   final case class Bm25Index(postings: DataFrame, lexicon: DataFrame,
                              nDocs: Long, lTokens: Long, maxDl: Long,
                              avgdlQ: Long, epoch: Long, batchId: Long,
                              shards: Int)
 
-  /** Read + validate. Beyond the geometry stamps, this is the TORN-
-    * APPEND detector (r17 ADVICE): an append mutates three legs
-    * (postings append, lexicon swap, stats swap — stats LAST, the
-    * commit point), and a crash between any two leaves legs from
-    * different epochs. Every leg carries its epoch, so the read
-    * cross-checks all three and fails LOUD instead of serving
-    * silently mis-scored results:
-    *  - postings max(_b_epoch) — a PARTITION column, so the probe is
-    *    directory-listing weight, no data read — must equal the stats
-    *    epoch (orphan postings from an uncommitted append ⇒ greater);
-    *  - the lexicon's _l_epoch (constant column, one first()) must
-    *    equal the stats epoch (lexicon swapped but stats not ⇒ ahead);
-    *  - a torn stats swap itself reads as 0 or 2 rows ⇒ the existing
-    *    ONE-row require.
-    * Recovery from a torn state: re-run the failed append's intake
-    * (postings orphans at epoch E+1 are invisible to nothing — they
-    * are detected, not filtered — so the remedy is rebuild or restore
-    * the `__precompact` copy the swap choreography leaves behind). */
   /** The validated scalar state a [[readBm25Index]] collects — the
-    * [[ArtifactCache]] payload (frames are re-created per read; their
+    * [[Artifact]] cache payload (frames are re-created per read; their
     * RESOLVED schemas ride along so a hit's reads skip the schema-
-    * inference/footer jobs — absent right after a build, captured and
-    * re-installed on the first hit). */
+    * inference/footer jobs — absent right after a build or append,
+    * captured and re-installed on the first hit). */
   private final case class Bm25Meta(nDocs: Long, lTokens: Long, maxDl: Long,
-      avgdlQ: Long, epoch: Long, batchId: Long, shards: Int,
+      avgdlQ: Long, shards: Int,
       postingsSchema: Option[org.apache.spark.sql.types.StructType] = None,
       lexiconSchema: Option[org.apache.spark.sql.types.StructType] = None)
-  private def bm25CacheKey(path: String) = s"bm25:$path"
-  private def bm25FpDirs(path: String) = Seq(s"$path/stats", s"$path/lexicon")
 
+  private val Bm25 = Artifact.Family("bm25", dataLeg = "postings",
+    partCol = "_p_shard", dataCols = Seq("doc_id", "term", "tf", "dl"),
+    legs = Seq("lexicon"), rebuild = "writeBm25Index")
+
+  /** Read + validate through the [[Artifact]] protocol (cache hit, or a
+    * cold read that refuses torn states) plus the family's stamps: the
+    * score arithmetic (`_p_fbits`), the shard geometry against the
+    * written `_p_shard=` directories, and the lexicon's epoch — an
+    * append swaps the lexicon before the stats commit, so a lexicon
+    * ahead of stats is a torn append. */
   def readBm25Index(spark: org.apache.spark.sql.SparkSession,
                     path: String): Bm25Index = {
-    // r20 (verdict #2a/#6): one full stamp-and-torn-state validation
-    // per committed artifact state per JVM — the validation jobs (stats
-    // collect + two per-leg epoch aggregations) re-ran on EVERY read,
-    // and the intake loops read per micro-batch. Cache hit = fingerprint
-    // match on the commit legs; the postings/lexicon frames are always
-    // re-created from parquet (metadata cache, never a result cache).
-    val cached = ArtifactCache.lookup[Bm25Meta](spark, bm25CacheKey(path),
-      bm25FpDirs(path))
-    // the postings leg is not fingerprinted, so the torn-append
-    // detector stays live on the hit path as a driver-side epoch-dir
-    // walk (orphan postings always land under a fresh _b_epoch=E+1
-    // directory); any disagreement falls through to full validation,
-    // which fails loud with the torn-state message
-    if (cached.isDefined &&
-        ArtifactCache.maxEpochDir(spark, s"$path/postings")
-          .contains(cached.get.epoch)) {
-      val m = cached.get
-      def rd(dir: String, sch: Option[org.apache.spark.sql.types.StructType]) =
-        sch.fold(spark.read)(spark.read.schema).parquet(dir)
+    def rd(dir: String, sch: Option[org.apache.spark.sql.types.StructType]) =
+      sch.fold(spark.read)(spark.read.schema).parquet(dir)
+    Artifact.cached[Bm25Meta](spark, Bm25, path).map { c =>
+      val m = c.meta
       val postings = rd(s"$path/postings", m.postingsSchema)
       val lexicon = rd(s"$path/lexicon", m.lexiconSchema)
       if (m.postingsSchema.isEmpty) // upgrade: next hit skips inference
-        ArtifactCache.install(spark, bm25CacheKey(path), bm25FpDirs(path),
-          m.copy(postingsSchema = Some(postings.schema),
-            lexiconSchema = Some(lexicon.schema)))
-      return Bm25Index(postings, lexicon,
-        m.nDocs, m.lTokens, m.maxDl, m.avgdlQ, m.epoch, m.batchId, m.shards)
+        Artifact.install(spark, Bm25, path, c.copy(meta = m.copy(
+          postingsSchema = Some(postings.schema), lexiconSchema = Some(lexicon.schema))))
+      Bm25Index(postings, lexicon,
+        m.nDocs, m.lTokens, m.maxDl, m.avgdlQ, c.epoch, c.batchId, m.shards)
+    }.getOrElse {
+      val c = Artifact.committed(spark, Bm25, path)
+      val st = c.meta
+      require(st.getAs[Int]("_p_fbits") == Bm25FBits,
+        s"bm25 index at $path was built with ${st.getAs[Int]("_p_fbits")} " +
+          s"fractional idf bits, this library scores with $Bm25FBits — " +
+          "stored idf_q would silently mis-rank; rebuild the index")
+      val shards = st.getAs[Int]("_p_shards")
+      // the shard bounds ride the protocol's one data-leg aggregate (no
+      // extra job): a _p_shard= directory outside [0, stamp) means the
+      // postings were written at another geometry than the stamp says,
+      // and a serve pruning at the stamp would drop posting lists. The
+      // check is one-sided (a small corpus need not fill every shard); a
+      // stamp ABOVE the written geometry could only come from a rebuild
+      // that died before its commit, and a rebuild retracts the old
+      // stats first, so that state reads as a missing commit point
+      val (postings, pb) = Artifact.dataLeg(spark, Bm25, path, c.epoch,
+        min(col("_p_shard").cast("long")), max(col("_p_shard").cast("long")))
+      require(shards > 0 && pb.getLong(1) >= 0 && pb.getLong(2) < shards,
+        s"bm25 index at $path is stamped at $shards posting shards but its " +
+          s"_p_shard= directories span [${pb.getLong(1)}, ${pb.getLong(2)}] — " +
+          "shard pruning would drop posting lists and fail open; rebuild the index")
+      val lexicon = spark.read.parquet(s"$path/lexicon")
+      require(Set("term", "df", "idf_q", "_l_epoch")
+        .subsetOf(lexicon.columns.toSet),
+        s"bm25 index at $path: lexicon lacks expected columns, got " +
+          lexicon.columns.mkString(", "))
+      // aggregate BOTH bounds, not a sampled head() row: a mixed-epoch
+      // lexicon directory (torn swap leaving old+new files) would pass
+      // a single-row probe whenever the sampled row happens to carry
+      // the committed epoch (r18 ADVICE) — a metadata-weight scan over
+      // a constant column
+      val lexE = lexicon.agg(min(col("_l_epoch").cast("long")),
+        max(col("_l_epoch").cast("long"))).head()
+      require(lexE.getLong(0) == c.epoch && lexE.getLong(1) == c.epoch,
+        s"bm25 index at $path is TORN: lexicon epochs span " +
+          s"[${lexE.getLong(0)}, ${lexE.getLong(1)}] vs stats epoch " +
+          s"${c.epoch} — an append crashed between the lexicon swap and " +
+          s"the stats commit. ${Artifact.recovery(spark, Bm25, path)}")
+      val m = Bm25Meta(st.getAs[Long]("n_docs"), st.getAs[Long]("l_tokens"),
+        st.getAs[Long]("max_dl"), st.getAs[Long]("avgdl_q"), shards,
+        Some(postings.schema), Some(lexicon.schema))
+      Artifact.install(spark, Bm25, path, c.copy(meta = m))
+      Bm25Index(postings, lexicon,
+        m.nDocs, m.lTokens, m.maxDl, m.avgdlQ, c.epoch, c.batchId, shards)
     }
-    val statsDir = new org.apache.hadoop.fs.Path(s"$path/stats")
-    require(statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(statsDir),
-      s"bm25 index at $path has no stats commit point — a build died " +
-        "before committing (or the path holds no index); rebuild the index")
-    val stats = spark.read.parquet(s"$path/stats").collect()
-    require(stats.length == 1,
-      s"bm25 index at $path: stats must be ONE row, got ${stats.length}")
-    val st = stats.head
-    require(st.getAs[Int]("_p_fbits") == Bm25FBits,
-      s"bm25 index at $path was built with ${st.getAs[Int]("_p_fbits")} " +
-        s"fractional idf bits, this library scores with $Bm25FBits — " +
-        "stored idf_q would silently mis-rank; rebuild the index")
-    val shards = st.getAs[Int]("_p_shards")
-    val epoch = st.getAs[Long]("_p_epoch")
-    val postings = spark.read.parquet(s"$path/postings")
-    require(Set("doc_id", "term", "tf", "dl", "_p_shard", "_b_epoch")
-      .subsetOf(postings.columns.toSet),
-      s"bm25 index at $path: postings lack expected columns, got " +
-        postings.columns.mkString(", "))
-    // cast: partition-column type inference narrows small values to int.
-    // The shard bounds ride the same partition-column aggregate (no
-    // extra job): a _p_shard= directory outside [0, stamp) means the
-    // postings were written at another geometry than the stamp says,
-    // and a serve pruning at the stamp would drop posting lists. The
-    // check is one-sided (a small corpus need not fill every shard); a
-    // stamp ABOVE the written geometry could only come from a rebuild
-    // that died before its commit, and a rebuild retracts the old
-    // stats first, so that state reads as a missing commit point
-    val pb = postings.agg(max(col("_b_epoch").cast("long")),
-      min(col("_p_shard").cast("long")), max(col("_p_shard").cast("long"))).head()
-    require(shards > 0 && pb.getLong(1) >= 0 && pb.getLong(2) < shards,
-      s"bm25 index at $path is stamped at $shards posting shards but its " +
-        s"_p_shard= directories span [${pb.getLong(1)}, ${pb.getLong(2)}] — " +
-        "shard pruning would drop posting lists and fail open; rebuild the index")
-    val maxBe = pb.getLong(0)
-    require(maxBe == epoch,
-      s"bm25 index at $path is TORN: postings carry epoch $maxBe but " +
-        s"stats committed epoch $epoch — an append crashed between the " +
-        "postings write and the lexicon/stats swap; serving would " +
-        "silently mis-score (stale df/idf against appended postings). " +
-        "Re-run the append's intake after a rebuild, or restore the " +
-        "__precompact recovery copies")
-    val lexicon = spark.read.parquet(s"$path/lexicon")
-    require(Set("term", "df", "idf_q", "_l_epoch")
-      .subsetOf(lexicon.columns.toSet),
-      s"bm25 index at $path: lexicon lacks expected columns, got " +
-        lexicon.columns.mkString(", "))
-    // aggregate BOTH bounds, not a sampled head() row: a mixed-epoch
-    // lexicon directory (torn swap leaving old+new files) would pass
-    // a single-row probe whenever the sampled row happens to carry
-    // the committed epoch (r18 ADVICE) — the postings check above
-    // already aggregates; this is the same metadata-weight scan over
-    // a constant column
-    val lexE = lexicon.agg(min(col("_l_epoch").cast("long")),
-      max(col("_l_epoch").cast("long"))).head()
-    require(lexE.getLong(0) == epoch && lexE.getLong(1) == epoch,
-      s"bm25 index at $path is TORN: lexicon epochs span " +
-        s"[${lexE.getLong(0)}, ${lexE.getLong(1)}] vs stats " +
-        s"epoch $epoch — an append crashed between the lexicon swap and " +
-        "the stats commit; rebuild or restore the __precompact copy")
-    val idx = Bm25Index(postings, lexicon,
-      st.getAs[Long]("n_docs"), st.getAs[Long]("l_tokens"),
-      st.getAs[Long]("max_dl"), st.getAs[Long]("avgdl_q"),
-      epoch, st.getAs[Long]("_p_batch_id"), shards)
-    ArtifactCache.install(spark, bm25CacheKey(path), bm25FpDirs(path),
-      Bm25Meta(idx.nDocs, idx.lTokens, idx.maxDl, idx.avgdlQ,
-        idx.epoch, idx.batchId, shards,
-        Some(postings.schema), Some(lexicon.schema)))
-    idx
   }
 
   /** q131: INCREMENTAL index append — the corpus-intake convention
@@ -506,27 +431,14 @@ object Retrieval {
     * an indexed document would double its postings (dedup the intake
     * first; that is what the dedup family is for).
     *
-    * Crash safety (r17 ADVICE): the three legs mutate in a COMMIT
-    * ORDER the reader can adjudicate. (1) the batch's postings append
-    * stamped with epoch E+1 (`_b_epoch` partition column); (2) the
-    * merged lexicon through the [[graft.operators.Dedup.compactSwap]]
-    * write→validate→rename choreography, stamped E+1; (3) stats LAST
-    * — the commit point — through the same choreography, epoch E+1.
-    * The postings leg is AWAITED before the lexicon swap, the first
-    * destructive step: a postings write that fails leaves lexicon and
-    * stats untouched (the pre-append state, still servable — re-run
-    * the append). A crash between any two later steps leaves legs at
-    * different epochs, which [[readBm25Index]] detects and refuses to
-    * serve (fail loud, never silently mis-score). The swap
-    * choreography additionally leaves a `__precompact` recovery copy
-    * so no crash window is destructive.
-    *
-    * Replay idempotency (r17 ADVICE): `batchId` is the streaming
-    * intake's fence — foreachBatch is at-least-once, and a restart
-    * replays the last uncommitted micro-batch. When `batchId` is
-    * given and not greater than the index's last-applied batch id,
-    * the append is a NO-OP (returns None): the replayed batch's
-    * postings are already in. Batch-mode callers (q131) omit it.
+    * Crash safety and replay idempotency are the [[Artifact.mutate]]
+    * protocol's: the batch's postings land at epoch E+1 while the
+    * merged lexicon materializes, and are awaited before the lexicon
+    * swap (the first destructive step); the stats swap commits LAST. A
+    * crash before the commit leaves a state [[readBm25Index]] refuses
+    * with the recovery text. `batchId` is the streaming intake's
+    * at-least-once fence: a batch id not past the index's last-applied
+    * one is a NO-OP (None). Batch-mode callers (q131) omit it.
     *
     * Returns the post-append INDEX HEALTH on an applied append (r20 —
     * [[graft.operators.Similarity.appendAnnIndex]]'s convention on the
@@ -542,156 +454,78 @@ object Retrieval {
                       batch: DataFrame, path: String,
                       batchId: Option[Long] = None): Option[Bm25IngestHealth] = {
     val idx = readBm25Index(spark, path) // stamp-validates before touching anything
-    if (batchId.exists(_ <= idx.batchId)) return None // at-least-once replay
-    // cache entry dropped BEFORE the first mutating write: a crash
-    // anywhere in the three-leg choreography must leave the next read
-    // on the full torn-state detection path (ArtifactCache's contract)
-    ArtifactCache.invalidate(bm25CacheKey(path))
-    val tfd = postingsFrame(batch).localCheckpoint()
-    val bs = statsFrame(tfd).collect()
-    require(bs.length == 1 && bs.head.getAs[Long]("n_docs") > 0,
-      s"appendBm25Index: empty intake batch — nothing to append")
-    val b = bs.head
-    val nDocs = idx.nDocs + b.getAs[Long]("n_docs")
-    val lTokens = idx.lTokens + b.getAs[Long]("l_tokens")
-    val maxDl = math.max(idx.maxDl, b.getAs[Long]("max_dl"))
-    val avgdlQ = (lTokens * AvgdlQ) / nDocs
-    require(maxDl * avgdlQ <= MaxDlAvgdlBound,
-      s"appendBm25Index: merged max_dl*avgdl_q ($maxDl * $avgdlQ) exceeds " +
-        s"the int64 score-exactness bound $MaxDlAvgdlBound — the " +
-        "fixed-point contribution would wrap; truncate pathological " +
-        "documents or narrow Bm25FBits")
-    val newEpoch = idx.epoch + 1L
-    // the batch's postings append and the merged-lexicon materialization
-    // are independent work over the pinned tfd — overlap them (guide
-    // §2.6; r20). The postings land at the index's STAMPED geometry,
-    // whatever the corpus has grown to since the build.
-    val postingsF = concurrent.Future {
-      tfd.withColumn("_p_shard", shardOf(col("term"), idx.shards))
-        .withColumn("_b_epoch", lit(newEpoch))
-        .write.mode("append").partitionBy("_p_shard", "_b_epoch")
-        .parquet(s"$path/postings")
-    }(concurrent.ExecutionContext.global)
-    // merged lexicon materialized BEFORE the same-path rewrite (the
-    // q129 stamp-spec precedent: localCheckpoint detaches the frame
-    // from the files the swap is about to replace). LAZY checkpoint +
-    // count = ONE materialization job (r20) — the count both pins the
-    // frame (before the swap replaces its input files) and is the
-    // rewrite validation's expected term count.
-    val mergedLex = idx.lexicon.select(col("term"), col("df"))
-      .unionByName(tfd.groupBy("term").agg(count(lit(1)).as("df")))
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .withColumn("n_docs", lit(nDocs))
-      .withColumn("idf_q", expr(idfExpr))
-      .select("term", "df", "idf_q")
-      .withColumn("_l_epoch", lit(newEpoch))
-      .localCheckpoint(false)
-    val wantTerms = mergedLex.count()
-    // the lexicon swap is the first DESTRUCTIVE step: the postings leg
-    // must have landed before it, so a failed postings write throws
-    // here with lexicon and stats untouched
-    concurrent.Await.result(postingsF, concurrent.duration.Duration.Inf)
-    Dedup.compactSwap(spark, s"$path/lexicon", what = "bm25 lexicon")(tmp =>
-      mergedLex.write.mode("overwrite").parquet(tmp)
-    ) { tmp =>
-      val got = spark.read.parquet(tmp)
-        .agg(count(lit(1)), max(col("_l_epoch"))).head()
-      // the batch's postings are already appended at epoch $newEpoch
-      // by this point, so failing here leaves the index TORN
-      // (readBm25Index refuses the postings/stats epoch mismatch) —
-      // the message must say so, not claim the live index is intact
-      // (r18 ADVICE: a misleading recovery message is an operator trap)
-      require(got.getLong(0) == wantTerms && got.getLong(1) == newEpoch,
-        s"appendBm25Index: lexicon rewrite validation failed " +
-          s"(${got.getLong(0)} terms at epoch ${got.getLong(1)}, expected " +
-          s"$wantTerms at $newEpoch) — the index is left TORN (postings " +
-          s"appended at epoch $newEpoch, stats at ${idx.epoch}); " +
-          "readBm25Index will refuse it. Rebuild, or restore the " +
-          "lexicon/stats __precompact recovery copies and re-run the append")
+    Artifact.mutate(spark, Bm25, path, idx.epoch, idx.batchId, batchId) { newEpoch =>
+      val tfd = postingsFrame(batch).localCheckpoint()
+      val bs = statsFrame(tfd).collect()
+      require(bs.length == 1 && bs.head.getAs[Long]("n_docs") > 0,
+        s"appendBm25Index: empty intake batch — nothing to append")
+      val b = bs.head
+      val nDocs = idx.nDocs + b.getAs[Long]("n_docs")
+      val lTokens = idx.lTokens + b.getAs[Long]("l_tokens")
+      val maxDl = math.max(idx.maxDl, b.getAs[Long]("max_dl"))
+      val avgdlQ = (lTokens * AvgdlQ) / nDocs
+      require(maxDl * avgdlQ <= MaxDlAvgdlBound,
+        s"appendBm25Index: merged max_dl*avgdl_q ($maxDl * $avgdlQ) exceeds " +
+          s"the int64 score-exactness bound $MaxDlAvgdlBound — the " +
+          "fixed-point contribution would wrap; truncate pathological " +
+          "documents or narrow Bm25FBits")
+      // merged lexicon materialized BEFORE the same-path rewrite (the
+      // q129 stamp-spec precedent: localCheckpoint detaches the frame
+      // from the files the swap is about to replace). LAZY checkpoint +
+      // count = ONE materialization job (r20) — the count both pins the
+      // frame (before the swap replaces its input files) and is the
+      // rewrite validation's expected term count.
+      val mergedLex = idx.lexicon.select(col("term"), col("df"))
+        .unionByName(tfd.groupBy("term").agg(count(lit(1)).as("df")))
+        .groupBy("term").agg(sum(col("df")).as("df"))
+        .withColumn("n_docs", lit(nDocs))
+        .withColumn("idf_q", expr(idfExpr))
+        .select("term", "df", "idf_q")
+        .withColumn("_l_epoch", lit(newEpoch))
+        .localCheckpoint(false)
+      new Artifact.Mutation[Bm25IngestHealth] {
+        // the postings land at the index's STAMPED geometry, whatever
+        // the corpus has grown to since the build
+        def data = tfd.withColumn("_p_shard", shardOf(col("term"), idx.shards))
+        lazy val terms = mergedLex.count()
+        def precommit() = Bm25IngestHealth(nDocs, lTokens, avgdlQ, terms)
+        override def swaps = Seq(Artifact.LegSwap("lexicon",
+          mergedLex.write.mode("overwrite").parquet(_), { tmp =>
+            val got = spark.read.parquet(tmp)
+              .agg(count(lit(1)), max(col("_l_epoch"))).head()
+            got.getLong(0) == terms && got.getLong(1) == newEpoch
+          }))
+        def stats = {
+          import spark.implicits._
+          Seq((nDocs, lTokens, maxDl, avgdlQ))
+            .toDF("n_docs", "l_tokens", "max_dl", "avgdl_q")
+            .withColumn("_p_fbits", lit(Bm25FBits))
+            .withColumn("_p_shards", lit(idx.shards))
+        }
+        def meta = Bm25Meta(nDocs, lTokens, maxDl, avgdlQ, idx.shards,
+          Some(idx.postings.schema), Some(idx.lexicon.schema))
+      }
     }
-    import spark.implicits._
-    val newStats = Seq((nDocs, lTokens, maxDl, avgdlQ))
-      .toDF("n_docs", "l_tokens", "max_dl", "avgdl_q")
-      .withColumn("_p_fbits", lit(Bm25FBits))
-      .withColumn("_p_shards", lit(idx.shards))
-      .withColumn("_p_epoch", lit(newEpoch))
-      .withColumn("_p_batch_id", lit(batchId.getOrElse(idx.batchId)))
-    Dedup.compactSwap(spark, s"$path/stats", what = "bm25 stats")(tmp =>
-      newStats.coalesce(1).write.mode("overwrite").parquet(tmp)
-    ) { tmp =>
-      val got = spark.read.parquet(tmp).collect()
-      require(got.length == 1 && got.head.getAs[Long]("_p_epoch") == newEpoch,
-        s"appendBm25Index: stats rewrite validation failed — the index " +
-          s"is left TORN (postings and lexicon already at epoch " +
-          s"$newEpoch, stats at ${idx.epoch}); readBm25Index will " +
-          "refuse it. Rebuild, or restore the stats __precompact " +
-          "recovery copy and re-run the append")
-    }
-    // commit point passed — install the post-append state so the next
-    // read (the very next micro-batch, or this batch's health emission)
-    // skips revalidation of a state this append just proved
-    ArtifactCache.install(spark, bm25CacheKey(path), bm25FpDirs(path),
-      Bm25Meta(nDocs, lTokens, maxDl, avgdlQ, newEpoch,
-        batchId.getOrElse(idx.batchId), idx.shards,
-        Some(idx.postings.schema), Some(idx.lexicon.schema)))
-    Some(Bm25IngestHealth(nDocs, lTokens, avgdlQ, wantTerms))
   }
 
   /** Postings compaction — [[Dedup.compactBandIndex]]'s convention on
     * the lexical artifact: every [[appendBm25Index]] adds one parquet
     * file per touched shard, so after N intake batches a serve's
     * pruned shard read opens O(N) small files (the 100 TB small-files
-    * problem). Rewrite the postings coalesced per shard (ONE
-    * repartition by the existing partition column — no new shuffle
-    * key), term-clustered within each shard so a serve's posting-list
-    * read is row-group-contiguous, through the shared crash-safe
-    * rewrite→validate→swap choreography ([[Dedup.compactSwap]]).
-    * Rows pass through unchanged — validation compares a CONTENT
-    * signature (count + order-free decimal sum of per-row xxhash64,
-    * [[Dedup.compactParquetStore]]'s check) and aborts loudly on any
-    * difference, live tree untouched. Lexicon/stats don't accumulate
-    * (each append rewrites them wholesale), so postings are the only
-    * leg that needs this. Offline-maintenance contract: quiesce
-    * appends/serves first (the band-index rule). Returns
-    * (files_before, files_after). */
+    * problem). [[Artifact.compact]] rewrites the postings coalesced per
+    * shard, term-clustered within each shard so a serve's posting-list
+    * read is row-group-contiguous, behind a content-signature check.
+    * Lexicon/stats don't accumulate (each append rewrites them
+    * wholesale), so postings are the only leg that needs this.
+    * Offline-maintenance contract: quiesce appends/serves first.
+    * Returns (files_before, files_after). */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        path: String,
                        maxRecordsPerFile: Long = 0L): (Long, Long) = {
     // stamp-validate before touching anything; the epoch cross-check
     // also guarantees no orphan postings ride into the rewrite
     val idx = readBm25Index(spark, path)
-    // the postings leg is NOT fingerprinted (stats/lexicon are the
-    // commit legs), so its rewrite must drop the entry itself
-    ArtifactCache.invalidate(bm25CacheKey(path))
-    val postings = spark.read.parquet(s"$path/postings")
-      .select("doc_id", "term", "tf", "dl", "_p_shard")
-    def sig(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        expr(s"sum(cast(xxhash64(${df.columns.map(c => s"`$c`").mkString(", ")}) " +
-          "as decimal(38,0)))")).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    }
-    val want = sig(postings)
-    // epochs collapse to the committed one: the epoch column exists to
-    // adjudicate torn appends, and a validated compaction IS one
-    // consistent corpus — collapsing is what restores one-file-per-
-    // shard after N appends (epoch-preserving would keep O(N) dirs)
-    Dedup.compactSwap(spark, s"$path/postings", what = "bm25 postings")(tmp =>
-      postings
-        .repartition(col("_p_shard"))
-        .sortWithinPartitions("term", "doc_id")
-        .withColumn("_b_epoch", lit(idx.epoch))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy("_p_shard", "_b_epoch").parquet(tmp)
-    ) { tmp =>
-      val got = sig(spark.read.parquet(tmp)
-        .select("doc_id", "term", "tf", "dl", "_p_shard"))
-      require(got == want,
-        s"compaction of $path/postings would change content ((rows, " +
-          s"checksum) $want -> $got) — aborting with the live index untouched")
-    }
+    Artifact.compact(spark, Bm25, path, idx.epoch, Seq("term", "doc_id"), maxRecordsPerFile)
   }
 
   /** Serve a query batch `(query_id, text)` against a persisted index:

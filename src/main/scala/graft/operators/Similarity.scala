@@ -149,10 +149,7 @@ object Similarity {
     // (q130) serves from; the per-config searches are byte-identical
     // search bodies over it (pqSearch — the q105 shared-body rule).
     val dim = 64; val m = 8; val ks = 16; val dsub = dim / m
-    val book: Seq[(Int, Int, Array[Double], Double)] =
-      bookRaw.toSeq.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
-      }
+    val book = withNorms(bookRaw)
     val ep = prepared(e)
     val cellTab = pqCellTable(cents, book, dsub, e.sparkSession)
     val codes = pqEncode(ep, cents, book, m, ks, dsub, residual = true)
@@ -536,6 +533,14 @@ object Similarity {
     * score/tie rule the plan uses. */
   /** Left-fold dot, the driver-side replica of graft_dot / the
     * oracle's explicit term chain — identical accumulation order. */
+  /** A codebook with each code vector's squared norm c2 attached —
+    * the shape every PQ encode, search and training round consumes. */
+  private def withNorms(book: Iterable[(Int, Int, Array[Double])])
+      : Seq[(Int, Int, Array[Double], Double)] =
+    book.toSeq.map { case (s, code, cv) =>
+      (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
+    }
+
   private def dotArr(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
     while (i < a.length) { acc += a(i) * b(i); i += 1 }
@@ -711,9 +716,7 @@ object Similarity {
       seedBook(embeddings, cents, nCells, m, ks, dsub, residual)
     var r = 0
     while (r < rounds) {
-      val bookDf = broadcast(book.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
-      }.toDF("s", "code", "cv", "c2"))
+      val bookDf = broadcast(withNorms(book).toDF("s", "code", "cv", "c2"))
       // (err, code) is unique per (vec_id, s) — sub rides as payload,
       // never compared (trainedCentroids' struct convention)
       val sums = subBase
@@ -778,10 +781,7 @@ object Similarity {
         cb.toSeq
       case None => seedBook(embeddings, cents, nCells, m, ks, dsub, residual)
     }
-    val book: Seq[(Int, Int, Array[Double], Double)] =
-      bookRaw.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
-      }
+    val book = withNorms(bookRaw)
     // residual mode's constant cell table built ONCE and shared by
     // both halves (r17 ADVICE: encode and search each built their own
     // identical copy — one relation guarantees broadcast reuse)
@@ -1402,8 +1402,6 @@ object Similarity {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val dsub = dim / m
     val spark = embeddings.sparkSession
-    import spark.implicits._
-    ArtifactCache.invalidate(annCacheKey(path)) // rebuild = new state
     // ONE digest for both train-cache keys (see corpusDigest's
     // digestHint contract) — the second full-corpus digest scan per
     // build was pure duplication
@@ -1413,10 +1411,6 @@ object Similarity {
     val book = trainedCodebooks(embeddings, nCells = nCells, m = m, ks = ks,
       rounds = trainRounds, residual = residual, centroids = Some(cents),
       digestHint = Some(dig))
-    val bookC2: Seq[(Int, Int, Array[Double], Double)] =
-      book.toSeq.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
-      }
     // `encodeOnly` splits TRAIN from ADD (q132 — the production PQ
     // lifecycle of the public Faiss API: train() on a representative
     // snapshot once, add() batches forever): quantizers always train
@@ -1425,35 +1419,37 @@ object Similarity {
     // [[appendAnnIndex]], and codes(base) ∪ codes(intake) equals a
     // full encode EXACTLY because encoding is per-row
     val toEncode = encodeOnly.getOrElse(embeddings)
-    // the corpus encode+write is the build's long pole and is
-    // independent of the KB-scale centroid/codebook writes and the
-    // n_codes count — overlap them (guide §2.6; r20), all awaited
-    // before the stats commit point
-    val codesF = concurrent.Future {
-      pqEncode(prepared(toEncode), cents, bookC2, m, ks, dsub, residual)
+    // the corpus encode+write (the build's long pole, the protocol's
+    // data leg) overlaps the KB-scale centroid/codebook writes and the
+    // n_codes count; the rebuild retracts the old stats first, so one
+    // that dies midway never reads as old stamps over new codes
+    Artifact.build(spark, Ann, path)(new Artifact.Mutation[Unit] {
+      def data = pqEncode(prepared(toEncode), cents, withNorms(book), m, ks, dsub, residual)
         .withColumn("_p_cell", col("cell"))
-        .withColumn("_b_epoch", lit(0L))
-        .write.mode("overwrite").partitionBy("_p_cell", "_b_epoch")
-        .parquet(s"$path/codes")
-    }(concurrent.ExecutionContext.global)
-    writeCentroids(cents, spark, s"$path/centroids")
-    writeCodebook(book, spark, s"$path/codebook")
-    // n_codes rides the stats so appends can merge it associatively
-    // and a serve never pays a codes count; encoding is 1:1 per
-    // vector, so the input count IS the code count
-    val nCodes = toEncode.count()
-    concurrent.Await.result(codesF, concurrent.duration.Duration.Inf)
-    Seq((m, ks, dsub, cents.length, residual, centStamp(cents),
-        nCodes, 0L, -1L))
+      // n_codes rides the stats so appends can merge it associatively
+      // and a serve never pays a codes count; encoding is 1:1 per
+      // vector, so the input count IS the code count
+      lazy val nCodes = toEncode.count()
+      def precommit(): Unit = {
+        writeCentroids(cents, spark, s"$path/centroids")
+        writeCodebook(book, spark, s"$path/codebook")
+        nCodes
+      }
+      def stats = annStats(spark, m, ks, dsub, cents, residual, nCodes)
+      def meta = AnnMeta(cents, book.sortBy(t => (t._1, t._2)), m, ks, dsub,
+        residual, nCodes)
+    })
+  }
+
+  /** The stats row of an ANN index (the protocol adds the epoch stamps). */
+  private def annStats(spark: org.apache.spark.sql.SparkSession,
+                       m: Int, ks: Int, dsub: Int,
+                       cents: Array[(Long, Array[Double])],
+                       residual: Boolean, nCodes: Long): DataFrame = {
+    import spark.implicits._
+    Seq((m, ks, dsub, cents.length, residual, centStamp(cents), nCodes))
       .toDF("_p_m", "_p_ks", "_p_dsub", "_p_cells", "_p_residual",
-        "_p_cent_stamp", "n_codes", "_p_epoch", "_p_batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    // stats is the LAST leg = the commit point — install the build's
-    // own state so the first read (append or serve) skips revalidating
-    // what this build just wrote (the writeBm25Index rule)
-    ArtifactCache.install(spark, annCacheKey(path), annFpDirs(path),
-      AnnMeta(cents, book.sortBy(t => (t._1, t._2)), m, ks, dsub,
-        residual, nCodes, 0L, -1L))
+        "_p_cent_stamp", "n_codes")
   }
 
   /** q132: INCREMENTAL ANN index append — q131's intake convention on
@@ -1471,13 +1467,12 @@ object Similarity {
     * Intake contract (q45/q131's): batch vec_ids are NEW — dedup the
     * intake first.
     *
-    * Crash safety + replay idempotency ([[graft.operators.Retrieval
-    * .appendBm25Index]]'s armor on the semantic leg): the batch's
-    * codes append stamped with epoch E+1, then the stats row —
-    * n_codes merged associatively, epoch bumped — commits LAST
-    * through the crash-safe swap choreography. A crash between the
-    * two leaves codes beyond the committed epoch, which
-    * [[readAnnIndex]] detects and refuses to serve. `batchId` is the
+    * Crash safety + replay idempotency are the [[Artifact.mutate]]
+    * protocol's (shared with [[graft.operators.Retrieval
+    * .appendBm25Index]]): the batch's codes append at epoch E+1, then
+    * the stats row — n_codes merged associatively — commits LAST. A
+    * crash between the two leaves codes beyond the committed epoch,
+    * which [[readAnnIndex]] refuses to serve. `batchId` is the
     * streaming intake's at-least-once fence (s24): a replayed batch
     * is a no-op returning None.
     *
@@ -1495,77 +1490,47 @@ object Similarity {
                      batch: DataFrame, path: String,
                      batchId: Option[Long] = None): Option[AnnIngestHealth] = {
     val idx = readAnnIndex(spark, path)
-    if (batchId.exists(_ <= idx.batchId)) return None // at-least-once replay
-    require(batch.limit(1).count() > 0,
-      "appendAnnIndex: empty intake batch — nothing to append")
-    // cache entry dropped BEFORE the first mutating write (the
-    // appendBm25Index rule): a crash between the codes append and the
-    // stats commit must leave the next read on the torn-state detector
-    ArtifactCache.invalidate(annCacheKey(path))
-    val bookC2: Seq[(Int, Int, Array[Double], Double)] =
-      idx.book.toSeq.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
+    Artifact.mutate(spark, Ann, path, idx.epoch, idx.batchId, batchId) { _ =>
+      require(batch.limit(1).count() > 0,
+        "appendAnnIndex: empty intake batch — nothing to append")
+      // ONE encode serves both the write and the health meter: pinned
+      // (localCheckpoint) so the two consumers cannot diverge, with the
+      // per-vector quantization error riding along (withError — one
+      // extra expression, no extra shuffle)
+      val enc = pqEncode(prepared(batch), idx.cents, withNorms(idx.book),
+          idx.m, idx.ks, idx.dsub, idx.residual, withError = true)
+        .withColumn("_p_cell", col("cell"))
+        .localCheckpoint()
+      new Artifact.Mutation[AnnIngestHealth] {
+        def data = enc.drop("qerr")
+        // the health aggregation overlaps the codes append
+        lazy val health = ingestHealth(enc, idx.nCodes)
+        def precommit() = health
+        def stats = annStats(spark, idx.m, idx.ks, idx.dsub, idx.cents,
+          idx.residual, health.nCodes)
+        // quantizers FROZEN by the append contract: cents/book carry over
+        def meta = AnnMeta(idx.cents, idx.book, idx.m, idx.ks, idx.dsub,
+          idx.residual, health.nCodes, Some(idx.codes.schema))
       }
-    val newEpoch = idx.epoch + 1L
-    // ONE encode serves both the write and the health meter: pinned
-    // (localCheckpoint) so the two consumers cannot diverge, with the
-    // per-vector quantization error riding along (withError — one
-    // extra expression, no extra shuffle)
-    val enc = pqEncode(prepared(batch), idx.cents, bookC2,
-        idx.m, idx.ks, idx.dsub, idx.residual, withError = true)
-      .withColumn("_p_cell", col("cell"))
-      .localCheckpoint()
-    // the codes append and the health aggregation are independent
-    // consumers of the pinned encode, both ahead of the stats commit
-    // point — overlap them (guide §2.6; r20), awaited before the swap
-    val codesF = concurrent.Future {
-      enc.drop("qerr")
-        .withColumn("_b_epoch", lit(newEpoch))
-        .write.mode("append").partitionBy("_p_cell", "_b_epoch")
-        .parquet(s"$path/codes")
-    }(concurrent.ExecutionContext.global)
-    // per-row fixed point clamped at 0 (here and in the health/drift
-    // twins): FP cancellation can make a ~0 qerr minutely negative,
-    // and a negative SUM would make Scala Long `/` (truncates) and
-    // the oracle's DuckDB `//` (floors) diverge — clamped on BOTH
-    // sides, truncation ≡ floor is provable (r18 ADVICE)
+    }
+  }
+
+  /** Ingest health of one encoded batch (`qerr` per row) over an index
+    * already holding `priorCodes` codes. Per-row fixed point clamped at
+    * 0 (here and in the drift twin): FP cancellation can make a ~0 qerr
+    * minutely negative, and a negative SUM would make Scala Long `/`
+    * (truncates) and the oracle's DuckDB `//` (floors) diverge —
+    * clamped on BOTH sides, truncation ≡ floor is provable (r18
+    * ADVICE). */
+  private def ingestHealth(enc: DataFrame, priorCodes: Long): AnnIngestHealth = {
     val h = enc.agg(
         count(lit(1)).as("n"),
         countDistinct(col("cell")).as("cells"),
         sum(greatest(floor(col("qerr") * lit(1048576.0) + lit(0.5))
             .cast("long"), lit(0L)))
           .as("sfp")).head()
-    concurrent.Await.result(codesF, concurrent.duration.Duration.Inf)
-    val nCodes = idx.nCodes + h.getAs[Long]("n")
-    import spark.implicits._
-    val newStats = Seq((idx.m, idx.ks, idx.dsub, idx.cents.length,
-        idx.residual, centStamp(idx.cents), nCodes, newEpoch,
-        batchId.getOrElse(idx.batchId)))
-      .toDF("_p_m", "_p_ks", "_p_dsub", "_p_cells", "_p_residual",
-        "_p_cent_stamp", "n_codes", "_p_epoch", "_p_batch_id")
-    Dedup.compactSwap(spark, s"$path/stats", what = "ann stats")(tmp =>
-      newStats.coalesce(1).write.mode("overwrite").parquet(tmp)
-    ) { tmp =>
-      val got = spark.read.parquet(tmp).collect()
-      // the batch's codes are already appended at epoch $newEpoch, so
-      // failing here leaves the index TORN (readAnnIndex refuses the
-      // epoch mismatch) — say so; "live index intact" would mislead
-      // an operator about the recovery state (r18 ADVICE, bm25 twin)
-      require(got.length == 1 && got.head.getAs[Long]("_p_epoch") == newEpoch,
-        s"appendAnnIndex: stats rewrite validation failed — the index " +
-          s"is left TORN (codes appended at epoch $newEpoch, stats at " +
-          s"${idx.epoch}); readAnnIndex will refuse it. Rebuild, or " +
-          "restore the stats __precompact recovery copy and re-run " +
-          "the append")
-    }
-    // commit point passed — install the post-append state (quantizers
-    // FROZEN by the append contract, so cents/book carry over)
-    ArtifactCache.install(spark, annCacheKey(path), annFpDirs(path),
-      AnnMeta(idx.cents, idx.book, idx.m, idx.ks, idx.dsub, idx.residual,
-        nCodes, newEpoch, batchId.getOrElse(idx.batchId),
-        Some(idx.codes.schema)))
-    Some(AnnIngestHealth(nCodes, h.getAs[Long]("cells"),
-      h.getAs[Long]("sfp") / h.getAs[Long]("n")))
+    AnnIngestHealth(priorCodes + h.getAs[Long]("n"), h.getAs[Long]("cells"),
+      h.getAs[Long]("sfp") / h.getAs[Long]("n"))
   }
 
   /** Read-only recomputation of a batch's ingest-health numbers under
@@ -1576,21 +1541,10 @@ object Similarity {
     * replay only ever re-delivers the LATEST batch, so the index's
     * merged n_codes is exactly the post-batch value and the batch
     * recomputes its own cells/qerr without touching the artifact. */
-  def annIngestHealthOf(idx: AnnIndex, batch: DataFrame): AnnIngestHealth = {
-    val bookC2: Seq[(Int, Int, Array[Double], Double)] =
-      idx.book.toSeq.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
-      }
-    val h = pqEncode(prepared(batch), idx.cents, bookC2,
-        idx.m, idx.ks, idx.dsub, idx.residual, withError = true)
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("cell")).as("cells"),
-        sum(greatest(floor(col("qerr") * lit(1048576.0) + lit(0.5))
-            .cast("long"), lit(0L)))
-          .as("sfp")).head()
-    AnnIngestHealth(idx.nCodes, h.getAs[Long]("cells"),
-      h.getAs[Long]("sfp") / h.getAs[Long]("n"))
-  }
+  def annIngestHealthOf(idx: AnnIndex, batch: DataFrame): AnnIngestHealth =
+    ingestHealth(pqEncode(prepared(batch), idx.cents, withNorms(idx.book),
+        idx.m, idx.ks, idx.dsub, idx.residual, withError = true), 0L)
+      .copy(nCodes = idx.nCodes)
 
   /** q136: RETRAIN-ROTATE — the operator that CONSUMES the alarm the
     * drift reports fire (r18 verdict #4: the lifecycle family had
@@ -1598,100 +1552,56 @@ object Similarity {
     * loop): retrain BOTH quantizers over the rotation corpus
     * (geometry preserved from the live stats — same cells/m/ks/
     * residual), re-encode the corpus under them, and ROTATE the
-    * artifact IN PLACE through the shared crash-safe
-    * rewrite→validate→swap choreography ([[Dedup.compactSwap]]) —
-    * codes, then centroids, then codebook, stats LAST. Training is
-    * deterministic ([[trainedCentroids]]/[[trainedCodebooks]]), so
-    * rotate ≡ a from-scratch [[writeAnnIndex]] over the same corpus
-    * EXACTLY (spec-pinned serve-identity); the in-place swap is what
-    * production wants — the artifact keeps its path, readers never
-    * re-point.
+    * artifact IN PLACE through the [[Artifact.mutate]] protocol — the
+    * codes leg swapped whole, then centroids, then codebook, stats
+    * LAST. Training is deterministic ([[trainedCentroids]]/
+    * [[trainedCodebooks]]), so rotate ≡ a from-scratch
+    * [[writeAnnIndex]] over the same corpus EXACTLY (spec-pinned
+    * serve-identity); the in-place swap is what production wants —
+    * the artifact keeps its path, readers never re-point.
     *
-    * Torn-rotate windows all fail LOUD at read, never open: a crash
-    * after the codes swap leaves codes at epoch E+1 vs stats at E
-    * (readAnnIndex's torn-append detector refuses); after the
-    * centroid swap, the stats `_p_cent_stamp` no longer matches the
-    * centroid table (the stamp guard refuses); after the codebook
-    * swap, same stamp guard. Only the final stats commit makes the
-    * rotated index servable. Offline-maintenance contract (the
-    * compaction rule): quiesce appends/serves first. */
+    * Torn-rotate windows all fail LOUD at read, never open: after the
+    * codes swap the codes carry epoch E+1 against stats at E, and the
+    * read refuses until the final stats commit makes the rotated index
+    * servable. Offline-maintenance contract (the compaction rule):
+    * quiesce appends/serves first. */
   def rotateAnnIndex(spark: org.apache.spark.sql.SparkSession,
                      path: String, corpus: DataFrame,
                      centRounds: Int = 2, trainRounds: Int = 2): Unit = {
     val idx = readAnnIndex(spark, path) // stamp-validate before touching anything
-    val newEpoch = idx.epoch + 1L
-    // one digest for both train keys (writeAnnIndex's r19 convention)
-    val dig = corpusDigest(corpus)
-    val cents = trainedCentroids(corpus, nCells = idx.cents.length,
-      rounds = centRounds, digestHint = Some(dig))
-    val book = trainedCodebooks(corpus, nCells = idx.cents.length,
-      m = idx.m, ks = idx.ks, rounds = trainRounds,
-      residual = idx.residual, centroids = Some(cents),
-      digestHint = Some(dig))
-    val bookC2: Seq[(Int, Int, Array[Double], Double)] =
-      book.toSeq.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
+    Artifact.mutate(spark, Ann, path, idx.epoch, idx.batchId, None) { _ =>
+      // one digest for both train keys (writeAnnIndex's r19 convention)
+      val dig = corpusDigest(corpus)
+      val cents = trainedCentroids(corpus, nCells = idx.cents.length,
+        rounds = centRounds, digestHint = Some(dig))
+      val book = trainedCodebooks(corpus, nCells = idx.cents.length,
+        m = idx.m, ks = idx.ks, rounds = trainRounds,
+        residual = idx.residual, centroids = Some(cents),
+        digestHint = Some(dig))
+      // pinned so the count and the swap write are ONE encode, and so
+      // the write cannot re-list the code files its own swap replaces
+      val newCodes = pqEncode(prepared(corpus), cents, withNorms(book),
+          idx.m, idx.ks, idx.dsub, idx.residual)
+        .withColumn("_p_cell", col("cell"))
+        .localCheckpoint()
+      val nCodes = newCodes.count()
+      val sortedBook = book.sortBy(t => (t._1, t._2))
+      new Artifact.Mutation[Unit] {
+        def data = newCodes
+        override def replace = Some(nCodes)
+        def precommit(): Unit = ()
+        override def swaps = Seq(
+          Artifact.LegSwap("centroids", writeCentroids(cents, spark, _),
+            tmp => centStamp(readCentroids(spark, tmp)) == centStamp(cents)),
+          Artifact.LegSwap("codebook", writeCodebook(book, spark, _), { tmp =>
+            val got = readCodebook(spark, tmp, idx.m, idx.ks)
+            got.length == sortedBook.length && got.zip(sortedBook).forall {
+              case (a, b) => a._1 == b._1 && a._2 == b._2 && a._3.sameElements(b._3) }
+          }))
+        def stats = annStats(spark, idx.m, idx.ks, idx.dsub, cents, idx.residual, nCodes)
+        def meta = AnnMeta(cents, sortedBook, idx.m, idx.ks, idx.dsub,
+          idx.residual, nCodes)
       }
-    // pinned so the count and the swap write are ONE encode, and so
-    // the write cannot re-list the code files its own swap replaces
-    val newCodes = pqEncode(prepared(corpus), cents, bookC2,
-        idx.m, idx.ks, idx.dsub, idx.residual)
-      .withColumn("_p_cell", col("cell"))
-      .withColumn("_b_epoch", lit(newEpoch))
-      .localCheckpoint()
-    val nCodes = newCodes.count()
-    // cache entry dropped before the FIRST swap (the append rule): a
-    // crash anywhere in the four-swap choreography leaves the next
-    // read on the full torn-state detection path
-    ArtifactCache.invalidate(annCacheKey(path))
-    Dedup.compactSwap(spark, s"$path/codes", what = "ann codes (rotate)")(tmp =>
-      newCodes.write.mode("overwrite")
-        .partitionBy("_p_cell", "_b_epoch").parquet(tmp)
-    ) { tmp =>
-      val got = spark.read.parquet(tmp)
-        .agg(count(lit(1)), max(col("_b_epoch").cast("long"))).head()
-      require(got.getLong(0) == nCodes && got.getLong(1) == newEpoch,
-        s"rotateAnnIndex: re-encode validation failed (${got.getLong(0)} " +
-          s"codes at epoch ${got.getLong(1)}, expected $nCodes at " +
-          s"$newEpoch) — aborting with the live index intact")
-    }
-    Dedup.compactSwap(spark, s"$path/centroids",
-        what = "ann centroids (rotate)")(tmp =>
-      writeCentroids(cents, spark, tmp)
-    ) { tmp =>
-      require(centStamp(readCentroids(spark, tmp)) == centStamp(cents),
-        s"rotateAnnIndex: centroid rewrite validation failed — the " +
-          s"index is left TORN (codes already rotated to epoch " +
-          s"$newEpoch); readAnnIndex will refuse it. Rebuild, or " +
-          "restore the __precompact recovery copies")
-    }
-    Dedup.compactSwap(spark, s"$path/codebook",
-        what = "ann codebook (rotate)")(tmp =>
-      writeCodebook(book, spark, tmp)
-    ) { tmp =>
-      val got = readCodebook(spark, tmp, idx.m, idx.ks)
-      require(got.length == book.length &&
-        got.zip(book.sortBy(t => (t._1, t._2))).forall { case (a, b) =>
-          a._1 == b._1 && a._2 == b._2 && a._3.sameElements(b._3) },
-        s"rotateAnnIndex: codebook rewrite validation failed — the " +
-          s"index is left TORN (codes and centroids already rotated); " +
-          "readAnnIndex will refuse it. Rebuild, or restore the " +
-          "__precompact recovery copies")
-    }
-    import spark.implicits._
-    val newStats = Seq((idx.m, idx.ks, idx.dsub, cents.length,
-        idx.residual, centStamp(cents), nCodes, newEpoch, idx.batchId))
-      .toDF("_p_m", "_p_ks", "_p_dsub", "_p_cells", "_p_residual",
-        "_p_cent_stamp", "n_codes", "_p_epoch", "_p_batch_id")
-    Dedup.compactSwap(spark, s"$path/stats", what = "ann stats (rotate)")(tmp =>
-      newStats.coalesce(1).write.mode("overwrite").parquet(tmp)
-    ) { tmp =>
-      val got = spark.read.parquet(tmp).collect()
-      require(got.length == 1 && got.head.getAs[Long]("_p_epoch") == newEpoch,
-        s"rotateAnnIndex: stats rewrite validation failed — the index " +
-          s"is left TORN at the final commit; readAnnIndex will refuse " +
-          "it. Restore the stats __precompact recovery copy to complete " +
-          "the rotation")
     }
   }
 
@@ -1722,10 +1632,7 @@ object Similarity {
   def annIndexDrift(index: AnnIndex, base: DataFrame, intake: DataFrame,
                     alarmPct: Int = 120): DataFrame = {
     require(alarmPct > 0, s"alarmPct must be positive, got $alarmPct")
-    val bookC2: Seq[(Int, Int, Array[Double], Double)] =
-      index.book.toSeq.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
-      }
+    val bookC2 = withNorms(index.book)
     val cellTab =
       if (index.residual)
         Some(pqCellTable(index.cents, bookC2, index.dsub, base.sparkSession))
@@ -1767,9 +1674,9 @@ object Similarity {
     * cell-partitioned frame (the serve prunes it at the scan).
     * `nCodes` is the stats-carried code count (appends merge it
     * associatively — a serve never counts the codes); `epoch` is the
-    * mutation counter and `batchId` the last applied streaming batch
-    * (s24's replay fence; -1 = none) — the BM25 index's armor
-    * mirrored onto the semantic leg. */
+    * committed mutation epoch and `batchId` the last applied streaming
+    * batch (s24's replay fence; -1 = none) — the [[Artifact]]
+    * protocol's state, shared with the BM25 index. */
   final case class AnnIndex(cents: Array[(Long, Array[Double])],
                             book: Array[(Int, Int, Array[Double])],
                             codes: DataFrame,
@@ -1777,149 +1684,87 @@ object Similarity {
                             nCodes: Long, epoch: Long, batchId: Long)
 
   /** The validated state a [[readAnnIndex]] collects — the
-    * [[ArtifactCache]] payload (KB-scale quantizer arrays + scalars;
+    * [[Artifact]] cache payload (KB-scale quantizer arrays + scalars;
     * the codes frame is re-created from parquet on every read). */
   private final case class AnnMeta(cents: Array[(Long, Array[Double])],
       book: Array[(Int, Int, Array[Double])],
       m: Int, ks: Int, dsub: Int,
       residual: Boolean, nCodes: Long,
-      epoch: Long, batchId: Long,
       codesSchema: Option[org.apache.spark.sql.types.StructType] = None)
-  private def annCacheKey(path: String) = s"ann:$path"
-  private def annFpDirs(path: String) =
-    Seq(s"$path/stats", s"$path/centroids", s"$path/codebook")
 
+  private val Ann = Artifact.Family("ann", dataLeg = "codes",
+    partCol = "_p_cell", dataCols = Seq("vec_id", "cell", "codes", "vn2"),
+    legs = Seq("centroids", "codebook"), rebuild = "writeAnnIndex")
+
+  /** Read + validate through the [[Artifact]] protocol (cache hit, or a
+    * cold read that refuses torn states) plus the family's stamps: the
+    * caller's PQ geometry, the centroid table against the digest the
+    * codes were encoded under, and the codebook geometry. The caller-
+    * geometry check stays on the hit path. */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String, m: Int = 8, ks: Int = 16): AnnIndex = {
-    // r20 (verdict #2a/#6): one full stamp/digest/torn-state validation
-    // per committed artifact state per JVM (the readBm25Index rule on
-    // the semantic leg) — a cold read pays stats collect + centroid and
-    // codebook collects + digest + the codes epoch aggregation; the
-    // intake loop (s24) and the build→append→serve chains re-read per
-    // batch/phase. The caller-geometry check stays on the hit path.
-    val cachedAnn = ArtifactCache.lookup[AnnMeta](spark, annCacheKey(path),
-      annFpDirs(path))
-    // torn-append detector on the hit path: the codes leg is not
-    // fingerprinted, but orphan codes land under a fresh _b_epoch=E+1
-    // directory — a driver-side walk sees them; disagreement falls
-    // through to the full validation's loud torn-state failure
-    if (cachedAnn.isDefined &&
-        ArtifactCache.maxEpochDir(spark, s"$path/codes")
-          .contains(cachedAnn.get.epoch)) {
-      val c = cachedAnn.get
-      require(c.m == m && c.ks == ks,
-        s"ann index at $path was encoded at m=${c.m} ks=${c.ks}, caller " +
+    def geometry(gm: Int, gks: Int): Unit =
+      require(gm == m && gks == ks,
+        s"ann index at $path was encoded at m=$gm ks=$gks, caller " +
           s"serves at m=$m ks=$ks — the flat ADC tables would " +
           "mis-stride; rebuild the index")
-      val codes = c.codesSchema.fold(spark.read)(spark.read.schema)
+    Artifact.cached[AnnMeta](spark, Ann, path).map { c =>
+      val a = c.meta
+      geometry(a.m, a.ks)
+      val codes = a.codesSchema.fold(spark.read)(spark.read.schema)
         .parquet(s"$path/codes")
-      if (c.codesSchema.isEmpty) // upgrade: next hit skips inference
-        ArtifactCache.install(spark, annCacheKey(path), annFpDirs(path),
-          c.copy(codesSchema = Some(codes.schema)))
-      return AnnIndex(c.cents, c.book, codes,
-        c.m, c.ks, c.dsub, c.residual, c.nCodes, c.epoch, c.batchId)
+      if (a.codesSchema.isEmpty) // upgrade: next hit skips inference
+        Artifact.install(spark, Ann, path,
+          c.copy(meta = a.copy(codesSchema = Some(codes.schema))))
+      AnnIndex(a.cents, a.book, codes,
+        a.m, a.ks, a.dsub, a.residual, a.nCodes, c.epoch, c.batchId)
+    }.getOrElse {
+      val c = Artifact.committed(spark, Ann, path)
+      val st = c.meta
+      geometry(st.getAs[Int]("_p_m"), st.getAs[Int]("_p_ks"))
+      val (codes, _) = Artifact.dataLeg(spark, Ann, path, c.epoch)
+      val cents = readCentroids(spark, s"$path/centroids")
+      require(st.getAs[Int]("_p_cells") == cents.length,
+        s"ann index at $path: stats stamp ${st.getAs[Int]("_p_cells")} cells " +
+          s"but the centroid table holds ${cents.length}")
+      // the load-bearing consistency check: the CODES were encoded
+      // against exactly these centroids — a swapped/retrained centroid
+      // table would route probes into cells whose codes mean something
+      // else (fails open: silently wrong neighbors)
+      require(st.getAs[String]("_p_cent_stamp") == centStamp(cents),
+        s"ann index at $path: centroid table does not match the digest " +
+          "the codes were encoded under — rebuild the index (a probe " +
+          "against drifted centroids silently mis-ranks)")
+      val book = readCodebook(spark, s"$path/codebook", m, ks)
+      val dsub = st.getAs[Int]("_p_dsub")
+      require(book.head._3.length == dsub,
+        s"ann index at $path: codebook sub-dim ${book.head._3.length} vs " +
+          s"stats stamp $dsub")
+      val a = AnnMeta(cents, book, m, ks, dsub, st.getAs[Boolean]("_p_residual"),
+        st.getAs[Long]("n_codes"), Some(codes.schema))
+      Artifact.install(spark, Ann, path, c.copy(meta = a))
+      AnnIndex(cents, book, codes, m, ks, dsub, a.residual, a.nCodes,
+        c.epoch, c.batchId)
     }
-    val stats = spark.read.parquet(s"$path/stats").collect()
-    require(stats.length == 1,
-      s"ann index at $path: stats must be ONE row, got ${stats.length}")
-    val st = stats.head
-    require(st.getAs[Int]("_p_m") == m && st.getAs[Int]("_p_ks") == ks,
-      s"ann index at $path was encoded at m=${st.getAs[Int]("_p_m")} " +
-        s"ks=${st.getAs[Int]("_p_ks")}, caller serves at m=$m ks=$ks — " +
-        "the flat ADC tables would mis-stride; rebuild the index")
-    val cents = readCentroids(spark, s"$path/centroids")
-    require(st.getAs[Int]("_p_cells") == cents.length,
-      s"ann index at $path: stats stamp ${st.getAs[Int]("_p_cells")} cells " +
-        s"but the centroid table holds ${cents.length}")
-    // the load-bearing consistency check: the CODES were encoded
-    // against exactly these centroids — a swapped/retrained centroid
-    // table would route probes into cells whose codes mean something
-    // else (fails open: silently wrong neighbors)
-    require(st.getAs[String]("_p_cent_stamp") == centStamp(cents),
-      s"ann index at $path: centroid table does not match the digest " +
-        "the codes were encoded under — rebuild the index (a probe " +
-        "against drifted centroids silently mis-ranks)")
-    val book = readCodebook(spark, s"$path/codebook", m, ks)
-    val dsub = st.getAs[Int]("_p_dsub")
-    require(book.head._3.length == dsub,
-      s"ann index at $path: codebook sub-dim ${book.head._3.length} vs " +
-        s"stats stamp $dsub")
-    val codes = spark.read.parquet(s"$path/codes")
-    require(Set("vec_id", "cell", "codes", "vn2", "_p_cell", "_b_epoch")
-      .subsetOf(codes.columns.toSet),
-      s"ann index at $path: codes lack expected columns, got " +
-        codes.columns.mkString(", "))
-    // torn-append detector ([[graft.operators.Retrieval.readBm25Index]]'s
-    // convention): codes beyond the committed stats epoch mean an
-    // append crashed between the codes write and the stats commit —
-    // refuse to serve a partially-landed batch. _b_epoch is a
-    // PARTITION column, so the probe is directory-listing weight.
-    val epoch = st.getAs[Long]("_p_epoch")
-    val maxBe = codes.agg(max(col("_b_epoch").cast("long"))).head().getLong(0)
-    require(maxBe == epoch,
-      s"ann index at $path is TORN: codes carry epoch $maxBe but stats " +
-        s"committed epoch $epoch — an append crashed before its commit; " +
-        "re-run the intake after a rebuild, or restore the __precompact " +
-        "recovery copy")
-    val idx = AnnIndex(cents, book, codes, m, ks, dsub,
-      st.getAs[Boolean]("_p_residual"),
-      st.getAs[Long]("n_codes"), epoch, st.getAs[Long]("_p_batch_id"))
-    ArtifactCache.install(spark, annCacheKey(path), annFpDirs(path),
-      AnnMeta(cents, book, m, ks, dsub, idx.residual, idx.nCodes,
-        idx.epoch, idx.batchId, Some(codes.schema)))
-    idx
   }
 
   /** Codes compaction — [[graft.operators.Retrieval.compactBm25Index]]'s
     * sibling on the ANN artifact: every [[appendAnnIndex]] adds one
     * parquet file per touched cell, so after N intake batches a
-    * serve's pruned cell read opens O(N) small files. Rewrite the
-    * codes coalesced per cell (repartition by the existing partition
-    * column — no new shuffle key), vec_id-clustered within each cell,
-    * through the shared crash-safe rewrite→validate→swap choreography
-    * ([[Dedup.compactSwap]]) with the content-signature check (count +
-    * order-free decimal xxhash64 sum — aborts loudly, live tree
-    * untouched). Centroids/codebook/stats never accumulate (one write
-    * each), so codes are the only leg that needs this. Offline-
-    * maintenance contract: quiesce appends/serves first. Returns
-    * (files_before, files_after). */
+    * serve's pruned cell read opens O(N) small files.
+    * [[Artifact.compact]] rewrites the codes coalesced per cell,
+    * vec_id-clustered within each cell, behind a content-signature
+    * check. Centroids/codebook/stats never accumulate (one write each),
+    * so codes are the only leg that needs this. Offline-maintenance
+    * contract: quiesce appends/serves first. Returns (files_before,
+    * files_after). */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String,
                       maxRecordsPerFile: Long = 0L): (Long, Long) = {
     // stamp-validate before touching anything; the epoch cross-check
     // also guarantees no orphan codes ride into the rewrite
     val idx = readAnnIndex(spark, path)
-    // the codes leg is NOT fingerprinted (stats/centroids/codebook are
-    // the commit legs), so its rewrite must drop the entry itself
-    ArtifactCache.invalidate(annCacheKey(path))
-    val codes = spark.read.parquet(s"$path/codes")
-      .select("vec_id", "cell", "codes", "vn2", "_p_cell")
-    def sig(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        expr(s"sum(cast(xxhash64(${df.columns.map(c => s"`$c`").mkString(", ")}) " +
-          "as decimal(38,0)))")).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    }
-    val want = sig(codes)
-    // epochs collapse to the committed one (the BM25 compaction's
-    // rule): preserving them would keep O(appends) files per cell,
-    // defeating the compaction
-    Dedup.compactSwap(spark, s"$path/codes", what = "ann codes")(tmp =>
-      codes
-        .repartition(col("_p_cell"))
-        .sortWithinPartitions("vec_id")
-        .withColumn("_b_epoch", lit(idx.epoch))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy("_p_cell", "_b_epoch").parquet(tmp)
-    ) { tmp =>
-      val got = sig(spark.read.parquet(tmp)
-        .select("vec_id", "cell", "codes", "vn2", "_p_cell"))
-      require(got == want,
-        s"compaction of $path/codes would change content ((rows, " +
-          s"checksum) $want -> $got) — aborting with the live index untouched")
-    }
+    Artifact.compact(spark, Ann, path, idx.epoch, Seq("vec_id"), maxRecordsPerFile)
   }
 
   /** Serve a query set against a persisted index: probes from the
@@ -1934,34 +1779,9 @@ object Similarity {
                     nQueries: Int = 10, k: Int = 5,
                     nProbe: Int = 8, rerank: Int = 64,
                     queries: Option[DataFrame] = None,
-                    knownCorpusDim: Option[Int] = None): DataFrame = {
-    // index-internal geometry is free to check (the stamps carry it):
-    // centroid dim MUST equal m·dsub or the PQ slices mis-stride
-    require(index.cents.head._2.length == index.m * index.dsub,
-      s"ann index geometry is inconsistent: centroid dim " +
-        s"${index.cents.head._2.length} != m*dsub = " +
-        s"${index.m * index.dsub} — the artifact is corrupt")
-    // corpus-vs-index dimension check (graft_dot min-truncates, so a
-    // mismatch would fail OPEN): one first() job per STORE, not per
-    // call — a serving loop (s22) validates the store once at stream
-    // start and passes the dim down (r17 ADVICE: this job was running
-    // per micro-batch on the serving hot path)
-    val corpusDim = knownCorpusDim.getOrElse(
-      embeddings.select(size(vecD(col("embedding")))).first().getInt(0))
-    require(index.cents.head._2.length == corpusDim,
-      s"ann index dimension ${index.cents.head._2.length} does not " +
-        s"match the corpus embedding dimension $corpusDim")
-    val bookC2: Seq[(Int, Int, Array[Double], Double)] =
-      index.book.toSeq.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
-      }
-    // `queries` = an EXTERNAL (vec_id, embedding) query frame (the s22
-    // streaming batch shape); default = the corpus-member convention
-    pqSearch(index.codes, prepared(embeddings), index.cents, bookC2,
-      index.m, index.ks, index.dsub, index.residual,
-      nQueries, k, nProbe, rerank, pruneAtScan = true,
-      queriesOverride = queries.map(prepared))
-  }
+                    knownCorpusDim: Option[Int] = None): DataFrame =
+    annServe(index, embeddings, None, nQueries, k, nProbe, rerank, queries,
+      knownCorpusDim)
 
   /** q137: FILTERED ANN SERVING — top-k WITHIN a predicate, how every
     * production vector store actually serves (lang = X, source = Y,
@@ -1990,25 +1810,39 @@ object Similarity {
                             nQueries: Int = 10, k: Int = 5,
                             nProbe: Int = 8, rerank: Int = 64,
                             queries: Option[DataFrame] = None,
-                            knownCorpusDim: Option[Int] = None): DataFrame = {
+                            knownCorpusDim: Option[Int] = None): DataFrame =
+    annServe(index, embeddings, Some(pred), nQueries, k, nProbe, rerank, queries,
+      knownCorpusDim)
+
+  /** The one serve body of [[annServeIndex]] and
+    * [[annServeIndexFiltered]] — `candFilter` rides the code scan. */
+  private def annServe(index: AnnIndex, embeddings: DataFrame,
+                       candFilter: Option[Column], nQueries: Int, k: Int,
+                       nProbe: Int, rerank: Int, queries: Option[DataFrame],
+                       knownCorpusDim: Option[Int]): DataFrame = {
+    // index-internal geometry is free to check (the stamps carry it):
+    // centroid dim MUST equal m·dsub or the PQ slices mis-stride
     require(index.cents.head._2.length == index.m * index.dsub,
       s"ann index geometry is inconsistent: centroid dim " +
         s"${index.cents.head._2.length} != m*dsub = " +
         s"${index.m * index.dsub} — the artifact is corrupt")
+    // corpus-vs-index dimension check (graft_dot min-truncates, so a
+    // mismatch would fail OPEN): one first() job per STORE, not per
+    // call — a serving loop (s22) validates the store once at stream
+    // start and passes the dim down (r17 ADVICE: this job was running
+    // per micro-batch on the serving hot path)
     val corpusDim = knownCorpusDim.getOrElse(
       embeddings.select(size(vecD(col("embedding")))).first().getInt(0))
     require(index.cents.head._2.length == corpusDim,
       s"ann index dimension ${index.cents.head._2.length} does not " +
         s"match the corpus embedding dimension $corpusDim")
-    val bookC2: Seq[(Int, Int, Array[Double], Double)] =
-      index.book.toSeq.map { case (s, code, cv) =>
-        (s, code, cv, cv.foldLeft(0.0)((a, x) => a + x * x))
-      }
-    pqSearch(index.codes, prepared(embeddings), index.cents, bookC2,
+    // `queries` = an EXTERNAL (vec_id, embedding) query frame (the s22
+    // streaming batch shape); default = the corpus-member convention
+    pqSearch(index.codes, prepared(embeddings), index.cents, withNorms(index.book),
       index.m, index.ks, index.dsub, index.residual,
       nQueries, k, nProbe, rerank, pruneAtScan = true,
       queriesOverride = queries.map(prepared),
-      candFilter = Some(pred))
+      candFilter = candFilter)
   }
 
   /** Deterministic digest of a centroid table — the consistency stamp
@@ -2036,7 +1870,7 @@ object Similarity {
   def writeSemanticStore(embeddings: DataFrame, path: String,
                          cents: Array[(Long, Array[Double])]): Unit = {
     require(cents.nonEmpty, "writeSemanticStore needs a centroid table")
-    ArtifactCache.invalidate(semCacheKey(path)) // rebuild = new state
+    Artifact.invalidate(semCacheKey(path)) // rebuild = new state
     semanticStoreRows(embeddings, cents)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
   }
@@ -2098,12 +1932,12 @@ object Similarity {
         s"[${sz.getInt(0)}, ${sz.getInt(1)}] but the store is dim $dim — " +
         "a short vector would silently mis-score (DotProduct " +
         "truncates); fix the intake")
-    ArtifactCache.invalidate(semCacheKey(path))
+    Artifact.invalidate(semCacheKey(path))
     semanticStoreRows(embeddings, cents)
       .write.mode("append").partitionBy("cell").parquet(path)
     // post-append state is valid by composition; schema captured on
     // the next read's first hit (the Bm25Meta upgrade convention)
-    ArtifactCache.install(embeddings.sparkSession, semCacheKey(path),
+    Artifact.install(embeddings.sparkSession, semCacheKey(path),
       Seq(path), SemMeta(dim, centStamp(cents), None))
   }
 
@@ -2125,8 +1959,8 @@ object Similarity {
                            cents: Array[(Long, Array[Double])],
                            maxRecordsPerFile: Long = 0L): (Long, Long) = {
     val store = readSemanticStore(spark, path, cents)
-    ArtifactCache.invalidate(semCacheKey(path)) // rewrite in flight
-    graft.operators.Dedup.compactSwap(spark, path, what = "semantic store")(
+    Artifact.invalidate(semCacheKey(path)) // rewrite in flight
+    Artifact.swap(spark, path, what = "semantic store")(
       tmp =>
         store.distinct()
           .select(col("cell"), col("vec_id"), col("v"), col("nrm2"),
@@ -2155,7 +1989,7 @@ object Similarity {
     * (round-13 advice: DotProduct truncates to the shorter operand,
     * so a short vector would otherwise silently mis-score every
     * probe against its cell). */
-  /** Validated semantic-store state — the [[ArtifactCache]] payload
+  /** Validated semantic-store state — the [[Artifact]] payload
     * (r20): dim + centroid stamp + the resolved schema. The store has
     * no separate commit leg, so the fingerprint is the ROOT listing —
     * a cell directory's mtime changes when an append lands a file in
@@ -2173,7 +2007,7 @@ object Similarity {
     // caller-centroids check stays on the hit path; appends keep the
     // invariant compositionally (appendToSemanticStoreValidated
     // validates ITS batch before writing).
-    val cached = ArtifactCache.lookup[SemMeta](spark, semCacheKey(path),
+    val cached = Artifact.lookup[SemMeta](spark, semCacheKey(path),
       Seq(path))
     if (cached.isDefined) {
       val m = cached.get
@@ -2186,7 +2020,7 @@ object Similarity {
           "fail open; rebuild the store or load its centroids")
       val full = m.schema.fold(spark.read)(spark.read.schema).parquet(path)
       if (m.schema.isEmpty) // upgrade: next hit skips inference
-        ArtifactCache.install(spark, semCacheKey(path), Seq(path),
+        Artifact.install(spark, semCacheKey(path), Seq(path),
           m.copy(schema = Some(full.schema)))
       return full.select("cell", "vec_id", "v", "nrm2")
     }
@@ -2213,7 +2047,7 @@ object Similarity {
         s"[${sz.getInt(0)}, ${sz.getInt(1)}] but the _p_dim stamp says " +
         s"${stamps.head.getInt(0)} — a short vector would silently " +
         "mis-score (DotProduct truncates); rebuild the store")
-    ArtifactCache.install(spark, semCacheKey(path), Seq(path),
+    Artifact.install(spark, semCacheKey(path), Seq(path),
       SemMeta(stamps.head.getInt(0), stamps.head.getString(1),
         Some(df.schema)))
     df.select("cell", "vec_id", "v", "nrm2")

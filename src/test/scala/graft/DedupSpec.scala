@@ -598,7 +598,7 @@ class DedupSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft_crash").toString
     val dir = base + "/admitted"
     Seq((1L, "alpha")).toDF("doc_id", "text").write.mode("append").parquet(dir)
-    // simulate a crash between compactSwap's two renames: the live
+    // simulate a crash between Artifact.swap's two renames: the live
     // path is gone, only the recovery copy remains
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
