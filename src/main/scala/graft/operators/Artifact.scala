@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The ARTIFACT COMMIT PROTOCOL of graft's epoch-committed indexes (the
   * BM25 index in [[Retrieval]], the ANN index in [[Similarity]]) and the
@@ -26,8 +27,10 @@ import org.apache.spark.sql.functions._
   *  - read: a cache hit ([[cached]]) checks the commit-leg fingerprint
   *    and the data leg's epoch directories against the committed epoch;
   *    a cold read ([[committed]] + [[dataLeg]]) requires every leg and a
-  *    one-row stats, runs ONE aggregate over the data leg (max epoch
-  *    plus the family's columns) and refuses a torn state loudly.
+  *    one-row stats, takes every leg's schema from one parquet footer
+  *    ([[parquet]]) and the data leg's epochs from its directory names
+  *    ([[partitions]]), scans no data leg, and refuses a torn state
+  *    loudly.
   *  - mutate at E+1 ([[mutate]]): the replay fence, invalidate, the
   *    data leg (appended at E+1, or swapped whole) concurrently with the
   *    family's pre-commit work and AWAITED before the first destructive
@@ -127,24 +130,56 @@ private[operators] object Artifact {
   /** Drop the entry — every writer's FIRST action before mutating. */
   def invalidate(key: String): Unit = entries.remove(key)
 
-  /** Max `_b_epoch` of a data leg from its partition DIRECTORY NAMES —
-    * a driver-side walk, no Spark job. Keeps the torn-append detector
-    * live on the hit path: the data leg is not fingerprinted, but an
-    * orphan write always lands under a fresh `_b_epoch=E+1`. */
-  private def maxEpochDir(spark: SparkSession, dir: String): Option[Long] = {
-    val root = new Path(dir)
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The data leg's `partCol=P/_b_epoch=E` directories as (P, E) pairs,
+    * from their NAMES — a driver-side `listStatus` walk, no Spark job,
+    * no footer read (`listStatus`, not `listFiles`: a located status
+    * loads each entry's permissions, which the local FS answers with a
+    * process per entry). Keeps the torn-append detector live on every
+    * read: the data leg is not fingerprinted, but an orphan write
+    * always lands under a fresh `_b_epoch=E+1`. */
+  private def partitions(spark: SparkSession, f: Family, path: String): Seq[(String, Long)] = {
+    val fs = fsOf(spark, path)
+    def named(p: Path, key: String) = fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith(s"$key=")).map(q => q -> q.getName.substring(key.length + 1))
     try {
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def epochsUnder(p: Path): Iterator[Long] =
-        fs.listStatus(p).iterator.flatMap { st =>
-          val nm = st.getPath.getName
-          if (nm.startsWith(s"$Epoch=")) Iterator.single(nm.substring(Epoch.length + 1).toLong)
-          else if (st.isDirectory && nm.contains("=")) epochsUnder(st.getPath)
-          else Iterator.empty
-        }
-      val es = epochsUnder(root)
-      if (es.isEmpty) None else Some(es.max)
-    } catch { case _: java.io.FileNotFoundException => None }
+      named(new Path(s"$path/${f.dataLeg}"), f.partCol).flatMap { case (dir, v) =>
+        named(dir, Epoch).map { case (_, e) => (v, e.toLong) }
+      }
+    } catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Read a parquet directory with the schema of ONE data file's
+    * footer, read on the driver — Spark's own inference reads one file
+    * too, but in a job. The schema is Spark's row-metadata JSON (the
+    * Parquet type converter for files written without it); partition
+    * columns are still inferred from the directory names, with the
+    * types inference gives them. A directory with no data file reads
+    * as `spark.read.parquet` does. `schema`, when the caller already
+    * holds it, skips the footer read. */
+  def parquet(spark: SparkSession, dir: String, schema: Option[StructType] = None): DataFrame =
+    schema.orElse(footerSchema(spark, dir)).fold(spark.read)(spark.read.schema).parquet(dir)
+
+  private def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = fsOf(spark, dir)
+    // Spark's reader skips these names (its hidden-file rule)
+    def visible(n: String) = !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
+    def first(p: Path): Option[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).sortBy(_.getPath.getName).iterator.filter(st => visible(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) first(st.getPath) else Some(st)).nextOption()
+    val file = try first(new Path(dir)) catch { case _: java.io.FileNotFoundException => None }
+    file.map { st =>
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get))
+    }
   }
 
   // ---- read ----
@@ -155,12 +190,12 @@ private[operators] object Artifact {
   def cached[M <: AnyRef](spark: SparkSession, f: Family,
                           path: String): Option[Committed[M]] =
     lookup[Committed[M]](spark, f.key(path), f.fpDirs(path))
-      .filter(c => maxEpochDir(spark, s"$path/${f.dataLeg}").contains(c.epoch))
+      .filter(c => partitions(spark, f, path).map(_._2).maxOption.contains(c.epoch))
 
   /** Cold read, first half: every leg present and the commit point ONE
     * row — its epoch, batch fence and the row for the family's stamps. */
   def committed(spark: SparkSession, f: Family, path: String): Committed[Row] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     require(fs.exists(new Path(s"$path/stats")),
       s"${f.name} index at $path has no stats commit point — a build died " +
         s"before committing (or the path holds no index). ${recovery(spark, f, path)}")
@@ -168,7 +203,7 @@ private[operators] object Artifact {
     require(missing.isEmpty,
       s"${f.name} index at $path is TORN: leg(s) ${missing.mkString(", ")} " +
         s"missing. ${recovery(spark, f, path)}")
-    val rows = spark.read.parquet(s"$path/stats").collect()
+    val rows = parquet(spark, s"$path/stats").collect()
     require(rows.length == 1,
       s"${f.name} index at $path: stats must be ONE row, got ${rows.length}. " +
         recovery(spark, f, path))
@@ -176,22 +211,23 @@ private[operators] object Artifact {
       rows.head)
   }
 
-  /** Cold read, second half: the data leg and ONE aggregate over it —
-    * column 0 its max epoch (refused unless it equals `epoch`: orphan
-    * rows of an uncommitted mutation), then `extra`. */
-  def dataLeg(spark: SparkSession, f: Family, path: String, epoch: Long,
-              extra: Column*): (DataFrame, Row) = {
-    val data = spark.read.parquet(s"$path/${f.dataLeg}")
+  /** Cold read, second half: the data leg (footer schema) and its
+    * [[partitions]] — the max epoch refused unless it equals `epoch`
+    * (orphan files of an uncommitted mutation); the partition values
+    * are returned for the family's own checks. No Spark job. */
+  def dataLeg(spark: SparkSession, f: Family, path: String,
+              epoch: Long): (DataFrame, Seq[String]) = {
+    val data = parquet(spark, s"$path/${f.dataLeg}")
     require((f.dataCols :+ f.partCol :+ Epoch).toSet.subsetOf(data.columns.toSet),
       s"${f.name} index at $path: ${f.dataLeg} lack expected columns, got " +
         data.columns.mkString(", "))
-    // cast: partition-column type inference narrows small values to int
-    val agg = data.agg(max(col(Epoch).cast("long")), extra: _*).head()
-    require(agg.getLong(0) == epoch,
+    val parts = partitions(spark, f, path)
+    val maxEpoch = parts.map(_._2).max
+    require(maxEpoch == epoch,
       s"${f.name} index at $path is TORN: ${f.dataLeg} carry epoch " +
-        s"${agg.getLong(0)} but stats committed epoch $epoch — a mutation " +
+        s"$maxEpoch but stats committed epoch $epoch — a mutation " +
         s"crashed before its stats commit. ${recovery(spark, f, path)}")
-    (data, agg)
+    (data, parts.map(_._1).distinct)
   }
 
   /** The ONE recovery text of every torn-state refusal. Rebuilding
@@ -200,7 +236,7 @@ private[operators] object Artifact {
     * swap died between its two renames, and renaming it back undoes
     * only that one swap. */
   def recovery(spark: SparkSession, f: Family, path: String): String = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     val copies = (f.dataLeg +: "stats" +: f.legs).filter(l =>
       !fs.exists(new Path(s"$path/$l")) && fs.exists(new Path(s"$path/${l}__precompact")))
     s"Recover by rebuilding the index: re-run ${f.rebuild} over the corpus " +
@@ -213,8 +249,10 @@ private[operators] object Artifact {
 
   // ---- write ----
 
+  private def epoched(data: DataFrame, epoch: Long) = data.withColumn(Epoch, lit(epoch))
+
   private def dataWriter(f: Family, data: DataFrame, epoch: Long) =
-    data.withColumn(Epoch, lit(epoch)).write.partitionBy(f.partCol, Epoch)
+    epoched(data, epoch).write.partitionBy(f.partCol, Epoch)
 
   private def stamped(stats: DataFrame, epoch: Long, batchId: Long): DataFrame =
     stats.withColumn("_p_epoch", lit(epoch)).withColumn("_p_batch_id", lit(batchId))
@@ -237,7 +275,7 @@ private[operators] object Artifact {
   def build(spark: SparkSession, f: Family, path: String)(m: Mutation[_]): Unit = {
     invalidate(f.key(path))
     val statsDir = new Path(s"$path/stats")
-    statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(statsDir, true)
+    fsOf(spark, path).delete(statsDir, true)
     overlapped(dataWriter(f, m.data, 0L).mode("overwrite").parquet(s"$path/${f.dataLeg}"))(
       m.precommit())
     stamped(m.stats, 0L, -1L).write.mode("overwrite").parquet(s"$path/stats")
@@ -262,7 +300,8 @@ private[operators] object Artifact {
       case Some(n) =>
         swap(spark, dataDir, s"${f.name} ${f.dataLeg}")(
           dataWriter(f, m.data, e).mode("overwrite").parquet(_)) { tmp =>
-          val got = spark.read.parquet(tmp).agg(count(lit(1)), max(col(Epoch).cast("long"))).head()
+          val got = parquet(spark, tmp, Some(epoched(m.data, e).schema))
+            .agg(count(lit(1)), max(col(Epoch).cast("long"))).head()
           require(got.getLong(0) == n && got.getLong(1) == e,
             s"${f.name} index at $path: the ${f.dataLeg} rewrite holds " +
               s"${got.getLong(0)} rows at epoch ${got.getLong(1)}, expected $n " +
@@ -277,9 +316,10 @@ private[operators] object Artifact {
       swap(spark, s"$path/${s.leg}", s"${f.name} ${s.leg}")(s.write)(tmp =>
         require(s.valid(tmp), torn(s.leg))))
     val b = batchId.getOrElse(lastBatch)
+    val st = stamped(m.stats, e, b)
     swap(spark, s"$path/stats", s"${f.name} stats")(
-      stamped(m.stats, e, b).write.mode("overwrite").parquet(_)) { tmp =>
-      val got = spark.read.parquet(tmp).collect()
+      st.write.mode("overwrite").parquet(_)) { tmp =>
+      val got = parquet(spark, tmp, Some(st.schema)).collect()
       require(got.length == 1 && got.head.getAs[Long]("_p_epoch") == e, torn("stats"))
     }
     install(spark, f, path, Committed(e, b, m.meta))
@@ -300,14 +340,14 @@ private[operators] object Artifact {
               sortCols: Seq[String], maxRecordsPerFile: Long): (Long, Long) = {
     invalidate(f.key(path))
     val dir = s"$path/${f.dataLeg}"
-    val data = spark.read.parquet(dir).drop(Epoch)
+    val data = parquet(spark, dir).drop(Epoch)
     val want = sig(data)
     swap(spark, dir, s"${f.name} ${f.dataLeg}")(tmp =>
       dataWriter(f, data.repartition(col(f.partCol))
           .sortWithinPartitions(sortCols.map(col): _*), epoch)
         .mode("overwrite").option("maxRecordsPerFile", maxRecordsPerFile).parquet(tmp)
     ) { tmp =>
-      val got = sig(spark.read.parquet(tmp).drop(Epoch))
+      val got = sig(parquet(spark, tmp, Some(data.schema)).drop(Epoch))
       require(got == want,
         s"compaction of $dir would change content ((rows, checksum) " +
           s"$want -> $got) — aborting with the live index untouched")
@@ -316,23 +356,20 @@ private[operators] object Artifact {
 
   /** The crash-safe swap of one directory, shared by every rewrite of a
     * live tree (artifact legs, band index, parquet and semantic stores):
-    * count files, write to `<path>__compacting`, run the caller's
-    * validation against it, then rename the live tree to
-    * `<path>__precompact`, the rewrite to `path`, and delete the old
-    * tree. A crash before the renames leaves the live tree untouched;
+    * count files (a `listStatus` walk, see [[partitions]]), write to
+    * `<path>__compacting`, run the caller's validation against it, then
+    * rename the live tree to `<path>__precompact`, the rewrite to
+    * `path`, and delete the old tree. A crash before the renames leaves the live tree untouched;
     * between them, `<path>__precompact` is the only copy (rename it
     * back). Returns (files_before, files_after). */
   def swap(spark: SparkSession, path: String, what: String)
           (writeTo: String => Unit)
           (validateTmp: String => Unit): (Long, Long) = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(p: String): Long = {
-      val it = fs.listFiles(new Path(p), true)
-      var c = 0L
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) c += 1 }
-      c
-    }
-    val before = dataFiles(path)
+    val fs = fsOf(spark, path)
+    def dataFiles(p: Path): Long = fs.listStatus(p).iterator.map(st =>
+      if (st.isDirectory) dataFiles(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) 1L else 0L).sum
+    val before = dataFiles(new Path(path))
     val tmp = s"${path}__compacting"
     val old = s"${path}__precompact"
     fs.delete(new Path(tmp), true); fs.delete(new Path(old), true)
@@ -344,7 +381,7 @@ private[operators] object Artifact {
       s"could not activate compacted $what ($tmp -> $path); " +
         s"RECOVER by renaming $old back to $path")
     fs.delete(new Path(old), true)
-    (before, dataFiles(path))
+    (before, dataFiles(new Path(path)))
   }
 
   /** Order-free content signature: (row count, SUM of per-row xxhash64

@@ -322,8 +322,8 @@ object Retrieval {
 
   /** The validated scalar state a [[readBm25Index]] collects — the
     * [[Artifact]] cache payload (frames are re-created per read; their
-    * RESOLVED schemas ride along so a hit's reads skip the schema-
-    * inference/footer jobs — absent right after a build or append,
+    * RESOLVED schemas ride along so a hit's reads skip the footer
+    * read — absent right after a build or append,
     * captured and re-installed on the first hit). */
   private final case class Bm25Meta(nDocs: Long, lTokens: Long, maxDl: Long,
       avgdlQ: Long, shards: Int,
@@ -342,13 +342,11 @@ object Retrieval {
     * ahead of stats is a torn append. */
   def readBm25Index(spark: org.apache.spark.sql.SparkSession,
                     path: String): Bm25Index = {
-    def rd(dir: String, sch: Option[org.apache.spark.sql.types.StructType]) =
-      sch.fold(spark.read)(spark.read.schema).parquet(dir)
     Artifact.cached[Bm25Meta](spark, Bm25, path).map { c =>
       val m = c.meta
-      val postings = rd(s"$path/postings", m.postingsSchema)
-      val lexicon = rd(s"$path/lexicon", m.lexiconSchema)
-      if (m.postingsSchema.isEmpty) // upgrade: next hit skips inference
+      val postings = Artifact.parquet(spark, s"$path/postings", m.postingsSchema)
+      val lexicon = Artifact.parquet(spark, s"$path/lexicon", m.lexiconSchema)
+      if (m.postingsSchema.isEmpty) // upgrade: next hit skips the footer read
         Artifact.install(spark, Bm25, path, c.copy(meta = m.copy(
           postingsSchema = Some(postings.schema), lexiconSchema = Some(lexicon.schema))))
       Bm25Index(postings, lexicon,
@@ -361,21 +359,22 @@ object Retrieval {
           s"fractional idf bits, this library scores with $Bm25FBits — " +
           "stored idf_q would silently mis-rank; rebuild the index")
       val shards = st.getAs[Int]("_p_shards")
-      // the shard bounds ride the protocol's one data-leg aggregate (no
-      // extra job): a _p_shard= directory outside [0, stamp) means the
-      // postings were written at another geometry than the stamp says,
-      // and a serve pruning at the stamp would drop posting lists. The
-      // check is one-sided (a small corpus need not fill every shard); a
-      // stamp ABOVE the written geometry could only come from a rebuild
-      // that died before its commit, and a rebuild retracts the old
-      // stats first, so that state reads as a missing commit point
-      val (postings, pb) = Artifact.dataLeg(spark, Bm25, path, c.epoch,
-        min(col("_p_shard").cast("long")), max(col("_p_shard").cast("long")))
-      require(shards > 0 && pb.getLong(1) >= 0 && pb.getLong(2) < shards,
+      // the shard bounds come from the _p_shard= directory names the
+      // protocol's data-leg walk returns (no job): a directory outside
+      // [0, stamp) means the postings were written at another geometry
+      // than the stamp says, and a serve pruning at the stamp would drop
+      // posting lists. The check is one-sided (a small corpus need not
+      // fill every shard); a stamp ABOVE the written geometry could only
+      // come from a rebuild that died before its commit, and a rebuild
+      // retracts the old stats first, so that state reads as a missing
+      // commit point
+      val (postings, parts) = Artifact.dataLeg(spark, Bm25, path, c.epoch)
+      val (lo, hi) = (parts.map(_.toLong).min, parts.map(_.toLong).max)
+      require(shards > 0 && lo >= 0 && hi < shards,
         s"bm25 index at $path is stamped at $shards posting shards but its " +
-          s"_p_shard= directories span [${pb.getLong(1)}, ${pb.getLong(2)}] — " +
+          s"_p_shard= directories span [$lo, $hi] — " +
           "shard pruning would drop posting lists and fail open; rebuild the index")
-      val lexicon = spark.read.parquet(s"$path/lexicon")
+      val lexicon = Artifact.parquet(spark, s"$path/lexicon")
       require(Set("term", "df", "idf_q", "_l_epoch")
         .subsetOf(lexicon.columns.toSet),
         s"bm25 index at $path: lexicon lacks expected columns, got " +
@@ -491,7 +490,7 @@ object Retrieval {
         def precommit() = Bm25IngestHealth(nDocs, lTokens, avgdlQ, terms)
         override def swaps = Seq(Artifact.LegSwap("lexicon",
           mergedLex.write.mode("overwrite").parquet(_), { tmp =>
-            val got = spark.read.parquet(tmp)
+            val got = Artifact.parquet(spark, tmp, Some(mergedLex.schema))
               .agg(count(lit(1)), max(col("_l_epoch"))).head()
             got.getLong(0) == terms && got.getLong(1) == newEpoch
           }))

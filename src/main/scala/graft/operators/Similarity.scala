@@ -1296,7 +1296,7 @@ object Similarity {
     * use (the artifact cannot know the corpus it will quantize). */
   def readCentroids(spark: org.apache.spark.sql.SparkSession,
                     path: String): Array[(Long, Array[Double])] = {
-    val rows = spark.read.parquet(path)
+    val rows = Artifact.parquet(spark, path)
       .select("cell", "cv", "_p_dim")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
@@ -1342,7 +1342,7 @@ object Similarity {
   def readCodebook(spark: org.apache.spark.sql.SparkSession,
                    path: String,
                    m: Int = 8, ks: Int = 16): Array[(Int, Int, Array[Double])] = {
-    val rows = spark.read.parquet(path)
+    val rows = Artifact.parquet(spark, path)
       .select("s", "code", "cv", "_p_m", "_p_ks", "_p_dsub")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray,
@@ -1491,16 +1491,18 @@ object Similarity {
                      batchId: Option[Long] = None): Option[AnnIngestHealth] = {
     val idx = readAnnIndex(spark, path)
     Artifact.mutate(spark, Ann, path, idx.epoch, idx.batchId, batchId) { _ =>
-      require(batch.limit(1).count() > 0,
-        "appendAnnIndex: empty intake batch — nothing to append")
       // ONE encode serves both the write and the health meter: pinned
       // (localCheckpoint) so the two consumers cannot diverge, with the
       // per-vector quantization error riding along (withError — one
-      // extra expression, no extra shuffle)
+      // extra expression, no extra shuffle). LAZY checkpoint + count =
+      // ONE job (appendBm25Index's convention): the count pins the
+      // encode and refuses an empty batch before any write
       val enc = pqEncode(prepared(batch), idx.cents, withNorms(idx.book),
           idx.m, idx.ks, idx.dsub, idx.residual, withError = true)
         .withColumn("_p_cell", col("cell"))
-        .localCheckpoint()
+        .localCheckpoint(false)
+      require(enc.count() > 0,
+        "appendAnnIndex: empty intake batch — nothing to append")
       new Artifact.Mutation[AnnIngestHealth] {
         def data = enc.drop("qerr")
         // the health aggregation overlaps the codes append
@@ -1711,9 +1713,8 @@ object Similarity {
     Artifact.cached[AnnMeta](spark, Ann, path).map { c =>
       val a = c.meta
       geometry(a.m, a.ks)
-      val codes = a.codesSchema.fold(spark.read)(spark.read.schema)
-        .parquet(s"$path/codes")
-      if (a.codesSchema.isEmpty) // upgrade: next hit skips inference
+      val codes = Artifact.parquet(spark, s"$path/codes", a.codesSchema)
+      if (a.codesSchema.isEmpty) // upgrade: next hit skips the footer read
         Artifact.install(spark, Ann, path,
           c.copy(meta = a.copy(codesSchema = Some(codes.schema))))
       AnnIndex(a.cents, a.book, codes,
@@ -1980,15 +1981,6 @@ object Similarity {
     }
   }
 
-  /** q101 read half: load + VALIDATE the admitted store against the
-    * caller's centroid table (fail-loud at read, the readBandIndex /
-    * readCodebook convention). Stamp checks read ONE pruned
-    * projection; the vector payload itself is then validated by a
-    * single min/max-size aggregate — size() reads list OFFSETS, not
-    * values — so a truncated or hand-edited `v` payload dies HERE
-    * (round-13 advice: DotProduct truncates to the shorter operand,
-    * so a short vector would otherwise silently mis-score every
-    * probe against its cell). */
   /** Validated semantic-store state — the [[Artifact]] payload
     * (r20): dim + centroid stamp + the resolved schema. The store has
     * no separate commit leg, so the fingerprint is the ROOT listing —
@@ -1998,6 +1990,15 @@ object Similarity {
       schema: Option[org.apache.spark.sql.types.StructType])
   private def semCacheKey(path: String) = s"sem:$path"
 
+  /** q101 read half: load + VALIDATE the admitted store against the
+    * caller's centroid table (fail-loud at read, the readBandIndex /
+    * readCodebook convention). The schema comes from one parquet
+    * footer ([[Artifact.parquet]]); the stamps and the vector payload
+    * are validated by ONE aggregate — size() reads list OFFSETS, not
+    * values — so a truncated or hand-edited `v` payload dies HERE
+    * (round-13 advice: DotProduct truncates to the shorter operand,
+    * so a short vector would otherwise silently mis-score every
+    * probe against its cell). */
   def readSemanticStore(spark: org.apache.spark.sql.SparkSession,
                         path: String,
                         cents: Array[(Long, Array[Double])]): DataFrame = {
@@ -2018,38 +2019,41 @@ object Similarity {
         s"semantic store at $path was built with a DIFFERENT centroid " +
           "table — probing would route intake into the wrong cells and " +
           "fail open; rebuild the store or load its centroids")
-      val full = m.schema.fold(spark.read)(spark.read.schema).parquet(path)
-      if (m.schema.isEmpty) // upgrade: next hit skips inference
+      val full = Artifact.parquet(spark, path, m.schema)
+      if (m.schema.isEmpty) // upgrade: next hit skips the footer read
         Artifact.install(spark, semCacheKey(path), Seq(path),
           m.copy(schema = Some(full.schema)))
       return full.select("cell", "vec_id", "v", "nrm2")
     }
-    val df = spark.read.parquet(path)
+    val df = Artifact.parquet(spark, path)
     require(Set("cell", "vec_id", "v", "nrm2", "_p_dim", "_p_cent")
       .subsetOf(df.columns.toSet),
       s"semantic store at $path lacks the expected columns, got " +
         s"${df.columns.mkString(", ")}")
-    val stamps = df.select("_p_dim", "_p_cent").distinct().collect()
-    require(stamps.length == 1,
+    // ONE aggregate: the stamps are one (dim, digest) pair iff every
+    // row carries both (a null counted as a stamp of its own) and each
+    // column's bounds meet; zero rows carry no stamp at all
+    val a = df.agg(min("_p_dim"), max("_p_dim"), min("_p_cent"), max("_p_cent"),
+      count(when(col("_p_dim").isNull || col("_p_cent").isNull, 1)), count(lit(1)),
+      min(size(col("v"))), max(size(col("v")))).first()
+    require(a.getLong(5) > 0 && a.getLong(4) == 0 &&
+      a.getInt(0) == a.getInt(1) && a.getString(2) == a.getString(3),
       s"semantic store at $path carries mixed parameter stamps")
-    require(stamps.head.getInt(0) == cents.head._2.length,
-      s"semantic store at $path was built at dim ${stamps.head.getInt(0)}, " +
+    val dim = a.getInt(0)
+    require(dim == cents.head._2.length,
+      s"semantic store at $path was built at dim $dim, " +
         s"caller's centroids are dim ${cents.head._2.length}")
-    require(stamps.head.getString(1) == centStamp(cents),
+    require(a.getString(2) == centStamp(cents),
       s"semantic store at $path was built with a DIFFERENT centroid " +
         "table — probing would route intake into the wrong cells and " +
         "fail open; rebuild the store or load its centroids")
-    val sz = df.select(min(size(col("v"))).as("lo"), max(size(col("v"))).as("hi"))
-      .first()
-    require(sz.getInt(0) == stamps.head.getInt(0) &&
-      sz.getInt(1) == stamps.head.getInt(0),
+    require(a.getInt(6) == dim && a.getInt(7) == dim,
       s"semantic store at $path is corrupt: vector sizes span " +
-        s"[${sz.getInt(0)}, ${sz.getInt(1)}] but the _p_dim stamp says " +
-        s"${stamps.head.getInt(0)} — a short vector would silently " +
+        s"[${a.getInt(6)}, ${a.getInt(7)}] but the _p_dim stamp says " +
+        s"$dim — a short vector would silently " +
         "mis-score (DotProduct truncates); rebuild the store")
     Artifact.install(spark, semCacheKey(path), Seq(path),
-      SemMeta(stamps.head.getInt(0), stamps.head.getString(1),
-        Some(df.schema)))
+      SemMeta(dim, a.getString(2), Some(df.schema)))
     df.select("cell", "vec_id", "v", "nrm2")
   }
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * vs the plan's bin()-string length), the df cap, the two-stage
   * shard-ranking identity, the RRF arithmetic law, and the plan
   * shape (broadcast posting join, no cartesian). */
-class RetrievalSpec extends SparkSpec {
+class RetrievalSpec extends SparkSpec with JobsDuring {
 
   private def docs(rows: (Long, String)*): DataFrame = {
     import spark.implicits._
@@ -438,30 +438,6 @@ class RetrievalSpec extends SparkSpec {
     spark.read.parquet(s"$path/stats")
       .withColumn("_p_shards", lit(64)).localCheckpoint()
       .write.mode("overwrite").parquet(s"$path/stats")
-  }
-
-  /** Spark jobs started while `body` runs. Listener delivery is
-    * asynchronous but FIFO, so a marked fence job submitted afterwards
-    * is seen only once every job of `body` has been counted. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("graft.fence") != null))
-          fenced.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setLocalProperty("graft.fence", "1")
-      try spark.range(1).count() finally sc.setLocalProperty("graft.fence", null)
-      fenced.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      (out, jobs.get)
-    } finally sc.removeSparkListener(l)
   }
 
   test("bm25 shard count: a power of two sized to the corpus, floor to cap") {

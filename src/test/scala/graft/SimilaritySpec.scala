@@ -600,10 +600,14 @@ class SimilaritySpec extends SparkSpec {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .localCheckpoint()
     Similarity.writeAnnIndex(e, s"$dir/index")
+    val pre = Similarity.readAnnIndex(spark, s"$dir/index")
     val err = intercept[IllegalArgumentException] {
       Similarity.appendAnnIndex(spark, e.filter(col("vec_id") < 0), s"$dir/index")
     }
     err.getMessage should include("empty intake")
+    // refused before any write: the index still reads at its pre-append state
+    val after = Similarity.readAnnIndex(spark, s"$dir/index")
+    (after.epoch, after.nCodes) shouldBe ((pre.epoch, pre.nCodes))
   }
 
   test("q133 drift report: undrifted intake stays quiet, scaled intake fires, assignment is scale-invariant") {
