@@ -829,6 +829,15 @@ object Exprs {
       copy(child = newChild)
   }
 
+  /** A zero or NaN centroid norm scores its cell NaN, which the strict
+    * `>` argmax silently never selects — refused, naming the cell. */
+  private def requirePositiveNorms(name: String, cellIds: Array[Long],
+                                   cnorms: Array[Double]): Unit = {
+    val bad = cnorms.indexWhere(n => !(n > 0))
+    require(bad < 0, s"$name: centroid of cell ${cellIds(bad)} has norm " +
+      s"${cnorms(bad)} — it would never be selected")
+  }
+
   /** Spherical-quantizer cell ARGMAX for one vector — [[PqEncodeVec]]'s
     * cell-assignment stage as a standalone kernel (r20, verdict #4):
     * the non-encode `assignCells` users (the semantic-dedup family,
@@ -858,6 +867,7 @@ object Exprs {
     require(cellIds.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
       "graft_cell_argmax: cells must be sorted ascending by id (the " +
         "tie-break contract)")
+    requirePositiveNorms("graft_cell_argmax", cellIds, cnorms)
 
     override def dataType: DataType = LongType
     override def prettyName: String = "graft_cell_argmax"
@@ -941,6 +951,7 @@ object Exprs {
     require(cellIds.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
       "graft_pq_encode: cells must be sorted ascending by id (the " +
         "tie-break contract)")
+    requirePositiveNorms("graft_pq_encode", cellIds, cnorms)
     require(bookCv.length == m * ks && bookC2.length == m * ks,
       s"graft_pq_encode: codebook must carry m*ks=${m * ks} entries")
     require(!residual || ccf.length == cents.length,

@@ -36,9 +36,10 @@ import org.apache.spark.sql.types.StructType
   *    family's pre-commit work and AWAITED before the first destructive
   *    swap, the family's leg swaps, the stats swap validated as one row
   *    at E+1, install.
-  *  - compact ([[compact]]): content signature, repartition by the
-  *    partition column, sort, epochs collapsed to the committed one,
-  *    swap.
+  *  - compact ([[compact]]): epochs collapsed to the committed one,
+  *    then [[compactRows]] — the one content-checked rewrite every
+  *    append-grown store compacts through (these two legs, the band
+  *    index, s09's admitted-text store, the semantic store).
   *  - recover ([[recovery]]): the one text every torn-state refusal
   *    carries.
   *
@@ -52,7 +53,7 @@ import org.apache.spark.sql.types.StructType
   * first write and install only past their commit point. A torn
   * mutation by another process CONCURRENT with a cached reader is
   * outside the offline-maintenance contract (quiesce first). */
-private[operators] object Artifact {
+private[graft] object Artifact {
 
   /** One epoch-committed artifact family: `dataLeg` is partitioned by
     * (`partCol`, `_b_epoch`) and holds at least `dataCols`; `legs` are
@@ -157,10 +158,22 @@ private[operators] object Artifact {
     * Parquet type converter for files written without it); partition
     * columns are still inferred from the directory names, with the
     * types inference gives them. A directory with no data file reads
-    * as `spark.read.parquet` does. `schema`, when the caller already
-    * holds it, skips the footer read. */
+    * as `spark.read.parquet` does — unless it is absent while its
+    * `<dir>__precompact` sibling exists: a [[swap]] died between its
+    * two renames, and the read refuses with the rename that recovers
+    * it. `schema`, when the caller already holds it, skips the footer
+    * read. */
   def parquet(spark: SparkSession, dir: String, schema: Option[StructType] = None): DataFrame =
-    schema.orElse(footerSchema(spark, dir)).fold(spark.read)(spark.read.schema).parquet(dir)
+    schema.orElse(footerSchema(spark, dir)) match {
+      case Some(s) => spark.read.schema(s).parquet(dir)
+      case None =>
+        val fs = fsOf(spark, dir)
+        val aside = s"${dir}__precompact"
+        require(fs.exists(new Path(dir)) || !fs.exists(new Path(aside)),
+          s"$dir is absent but $aside exists: a compaction crashed mid-swap. " +
+            s"Recover by renaming $aside back to $dir.")
+        spark.read.parquet(dir)
+    }
 
   private def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
     import org.apache.spark.sql.execution.datasources.parquet._
@@ -326,42 +339,50 @@ private[operators] object Artifact {
     Some(p)
   }
 
-  /** Rewrite the data leg coalesced per partition (ONE repartition by
-    * the existing partition column — no new shuffle key), sorted by
-    * `sortCols` within each, epochs collapsed to the committed one (a
-    * validated compaction IS one consistent corpus; keeping the epochs
-    * would keep O(appends) directories). Rows pass through unchanged —
-    * the [[sig]] check aborts loudly on any difference, live leg
-    * untouched. The data leg is not fingerprinted, so the entry is
-    * dropped here; the next read revalidates. Offline maintenance:
-    * quiesce appends and serves first. Returns (files_before,
-    * files_after). */
+  /** Compact the data leg through [[compactRows]], epochs collapsed to
+    * the committed one (a validated compaction IS one consistent
+    * corpus; keeping the epochs would keep O(appends) directories). The
+    * data leg is not fingerprinted, so the entry is dropped here; the
+    * next read revalidates. */
   def compact(spark: SparkSession, f: Family, path: String, epoch: Long,
-              sortCols: Seq[String], maxRecordsPerFile: Long): (Long, Long) = {
+              sortCols: Seq[String]): (Long, Long) = {
     invalidate(f.key(path))
     val dir = s"$path/${f.dataLeg}"
-    val data = parquet(spark, dir).drop(Epoch)
-    val want = sig(data)
-    swap(spark, dir, s"${f.name} ${f.dataLeg}")(tmp =>
-      dataWriter(f, data.repartition(col(f.partCol))
-          .sortWithinPartitions(sortCols.map(col): _*), epoch)
-        .mode("overwrite").option("maxRecordsPerFile", maxRecordsPerFile).parquet(tmp)
-    ) { tmp =>
-      val got = sig(parquet(spark, tmp, Some(data.schema)).drop(Epoch))
+    compactRows(spark, dir, s"${f.name} ${f.dataLeg}",
+      epoched(parquet(spark, dir), epoch), Seq(f.partCol, Epoch), sortCols)
+  }
+
+  /** THE compaction of every append-grown store: rewrite `dir` to hold
+    * exactly `rows`, repartitioned by the leading partition column (ONE
+    * partition for an unpartitioned store — no new shuffle key) and
+    * sorted by `sortCols` within each, then [[swap]] it in iff the
+    * rewrite's [[sig]] equals the rows' (compared by column name: a
+    * read-back puts partition columns last); any difference aborts
+    * loudly with the live tree untouched. File size is the session's
+    * `spark.sql.files.maxRecordsPerFile`. Offline maintenance: quiesce
+    * writers and readers first. Returns (files_before, files_after). */
+  def compactRows(spark: SparkSession, dir: String, what: String, rows: DataFrame,
+                  partCols: Seq[String], sortCols: Seq[String]): (Long, Long) = {
+    val want = sig(rows)
+    val parted = partCols.headOption.fold(rows.repartition(1))(p => rows.repartition(col(p)))
+    val sorted = if (sortCols.isEmpty) parted else parted.sortWithinPartitions(sortCols.map(col): _*)
+    swap(spark, dir, what)(sorted.write.mode("overwrite").partitionBy(partCols: _*).parquet(_)) { tmp =>
+      val got = sig(parquet(spark, tmp, Some(rows.schema)).select(rows.columns.map(col): _*))
       require(got == want,
         s"compaction of $dir would change content ((rows, checksum) " +
-          s"$want -> $got) — aborting with the live index untouched")
+          s"$want -> $got) — aborting with the live $what untouched")
     }
   }
 
   /** The crash-safe swap of one directory, shared by every rewrite of a
-    * live tree (artifact legs, band index, parquet and semantic stores):
+    * live tree (artifact legs, [[compactRows]]):
     * count files (a `listStatus` walk, see [[partitions]]), write to
     * `<path>__compacting`, run the caller's validation against it, then
     * rename the live tree to `<path>__precompact`, the rewrite to
     * `path`, and delete the old tree. A crash before the renames leaves the live tree untouched;
     * between them, `<path>__precompact` is the only copy (rename it
-    * back). Returns (files_before, files_after). */
+    * back; [[parquet]] and [[recovery]] say so). Returns (files_before,
+    * files_after). */
   def swap(spark: SparkSession, path: String, what: String)
           (writeTo: String => Unit)
           (validateTmp: String => Unit): (Long, Long) = {

@@ -408,99 +408,39 @@ object Dedup {
 
   /** Compact an append-grown band index in place — the maintenance
     * half of the s09 admit loop: [[appendToBandIndex]] adds one small
-    * parquet file per admitted batch per touched prefix, so after N
-    * batches a probe's scan opens O(N·256) files. Compaction rewrites
-    * the index to one sorted file per `bk_prefix` directory (clustered
-    * by `bk`, so parquet min-max row-group pruning serves point probes)
-    * and drops the exact-duplicate band rows a replayed at-least-once
-    * batch appends (semantics-free: the probe `distinct`s candidates
-    * anyway — see [[incrementalProbeIndex]]).
-    *
-    * OFFLINE maintenance, like any table OPTIMIZE: callers must
-    * quiesce admits (stop the s09 stream, or run between batches —
-    * `Trigger.AvailableNow` drains make this a natural seam). The
-    * sequence is crash-safe, never destructive: (1) rewrite to
-    * `<path>__compacting`; (2) validate the rewrite by re-reading it
-    * with the same parameter stamps and comparing DISTINCT row counts;
-    * (3) rename the live index to `<path>__precompact`, the rewrite to
-    * `path`, then delete the old tree. A crash before (3) leaves the
-    * live index untouched; a crash between the two renames leaves
-    * `<path>__precompact` as the recovery copy — restore by renaming
-    * it back.
-    *
-    * `maxRecordsPerFile` bounds file size at 100 TB (one prefix dir of
-    * a trillion-row index is far more than one sane file); 0 = engine
-    * default (no split). Returns (files_before, files_after). */
+    * parquet file per admitted batch per touched prefix. The rewrite
+    * ([[Artifact.compactRows]]: content-checked, crash-safe, offline) is
+    * one sorted file per `bk_prefix` directory (clustered by `bk`, so
+    * parquet min-max row-group pruning serves point probes) holding the
+    * DISTINCT (doc_id, bk) rows — a replayed at-least-once batch's exact
+    * duplicates dropped (semantics-free: the probe `distinct`s
+    * candidates anyway, see [[incrementalProbeIndex]]). */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String, n: Int = 3, numHashes: Int = 16,
-                       bands: Int = 4,
-                       maxRecordsPerFile: Long = 0L): (Long, Long) = {
+                       bands: Int = 4): (Long, Long) = {
     val index = readBandIndex(spark, path, n, numHashes, bands)
     // preserve the live tree's prefix geometry (legacy trees predate
     // width detection at constant 2)
     val pfxWidth = detectBandPrefixWidth(spark, path).getOrElse(2)
-    Artifact.swap(spark, path, what = "index")(tmp =>
+    Artifact.compactRows(spark, path, "band index",
       index.select(col("doc_id"), col("bk")).distinct()
         .withColumn("bk_prefix", substring(col("bk"), 1, pfxWidth))
-        .select(col("*") +: stampCols(n, numHashes, bands): _*)
-        .repartition(col("bk_prefix"))
-        .sortWithinPartitions("bk", "doc_id")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy("bk_prefix").parquet(tmp)
-    ) { tmp =>
-      // stamps must round-trip and no band row may be lost (counts
-      // compare distinct vs distinct — the compaction's only intended
-      // delta is dropping exact duplicates)
-      val wantRows = index.select(col("doc_id"), col("bk")).distinct().count()
-      val gotRows = readBandIndex(spark, tmp, n, numHashes, bands)
-        .select(col("doc_id"), col("bk")).distinct().count()
-      require(gotRows == wantRows,
-        s"compaction of $path would lose rows ($wantRows distinct before, " +
-          s"$gotRows after) — aborting with the live index untouched")
-    }
+        .select(col("*") +: stampCols(n, numHashes, bands): _*),
+      Seq("bk_prefix"), Seq("bk", "doc_id"))
   }
 
-  /** [[compactBandIndex]]'s sibling for s09's OTHER append-grown
-    * store: the admitted-text directory gains one small parquet file
-    * per admitted batch, and every later micro-batch reads the WHOLE
-    * store (the probe's `existing` side) — so after N batches each
-    * probe opens O(N) files. Same offline-maintenance contract
-    * (quiesce admits first) and the same crash-safe
-    * rewrite→validate→rename sequence; rows pass through unchanged
-    * (no dedup here — the admit loop's first-admission-wins anti-join
-    * guarantees doc_id uniqueness at write time, and dropping rows in
-    * a store that feeds exact-text verification would be silent data
-    * loss if that invariant ever broke — validation therefore
-    * compares a CONTENT signature, (row count, order-free sum of
-    * per-row hashes), and fails loudly on any difference).
-    * Clustered by doc_id so the verify join's row-group pruning works.
-    * Returns (files_before, files_after). */
+  /** Compact s09's OTHER append-grown store, the admitted-text directory
+    * (one small file per admitted batch, and every micro-batch reads the
+    * whole store), through [[Artifact.compactRows]]: rows unchanged (no
+    * dedup — the admit loop's first-admission-wins anti-join keeps
+    * doc_id unique, and the content check fails loudly if that ever
+    * broke), one partition clustered by doc_id so the verify join's
+    * row-group pruning works. */
   def compactParquetStore(spark: org.apache.spark.sql.SparkSession,
-                          path: String, targetPartitions: Int = 1,
-                          maxRecordsPerFile: Long = 0L): (Long, Long) = {
-    require(targetPartitions >= 1, "targetPartitions must be >= 1")
-    val store = spark.read.parquet(path)
-    val sortCols =
-      if (store.columns.contains("doc_id")) Seq(col("doc_id")) else Nil
-    Artifact.swap(spark, path, what = "store")(tmp => {
-      val w = store.repartition(targetPartitions)
-      (if (sortCols.nonEmpty) w.sortWithinPartitions(sortCols: _*) else w)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .parquet(tmp)
-    }) { tmp =>
-      // The store feeds exact-text verification, so validate CONTENT,
-      // not just cardinality: the order-free checksum catches a rewrite
-      // that corrupted or swapped values even when row counts agree,
-      // and catching doc_id-uniqueness breakage is exactly this
-      // check's job. One cheap agg per side.
-      val want = Artifact.sig(store)
-      val got = Artifact.sig(spark.read.parquet(tmp))
-      require(got == want,
-        s"compaction of $path would change content ((rows, checksum) " +
-          s"$want -> $got) — aborting with the live store untouched")
-    }
+                          path: String): (Long, Long) = {
+    val store = Artifact.parquet(spark, path)
+    Artifact.compactRows(spark, path, "store", store, Nil,
+      Seq("doc_id").filter(store.columns.contains))
   }
 
   /** q80: corpus-wide LINE-level dedup — the boilerplate-removal pass
@@ -902,11 +842,11 @@ object Dedup {
     * char per 16x past 2^20 docs: 16 dirs to ~1M docs, 256 to ~16M,
     * 4096 to ~268M, 65536 beyond — at 10^12 docs (the 100 TB shape)
     * that is ~60M band rows (~3 GB) per directory, bounded per file by
-    * compaction's maxRecordsPerFile. Probes never read bk_prefix (the
-    * bk equi-join carries the candidates), so width is pure layout:
-    * the value each index USES is detected from its own tree
-    * ([[detectBandPrefixWidth]]) — appends and compaction always agree
-    * with the build, whatever scale either ran at. */
+    * the session's `spark.sql.files.maxRecordsPerFile`. Probes never
+    * read bk_prefix (the bk equi-join carries the candidates), so width
+    * is pure layout: the value each index USES is detected from its own
+    * tree ([[detectBandPrefixWidth]]) — appends and compaction always
+    * agree with the build, whatever scale either ran at. */
   private[graft] def suggestBandPrefixWidth(nDocs: Long): Int = {
     var w = 1
     var cap = 1L << 20
@@ -958,14 +898,15 @@ object Dedup {
   def readBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     n: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame = {
     val raw =
-      try spark.read.parquet(path)
+      try Artifact.parquet(spark, path)
       catch {
         // a zero-row index: partitionBy writes NO data files for an
         // empty DataFrame, so there is no footer to infer from — but an
         // empty index is semantically valid (probing it yields zero
-        // candidates). A wrong path still fails (PATH_NOT_FOUND), and a
-        // directory [[writeBandIndex]] never touched (no _SUCCESS
-        // marker — e.g. a typo'd path that happens to exist) rethrows
+        // candidates). A wrong path still fails (PATH_NOT_FOUND; a
+        // half-swapped one with its rename text), and a directory
+        // [[writeBandIndex]] never touched (no _SUCCESS marker — e.g. a
+        // typo'd path that happens to exist) rethrows
         // rather than silently probing as empty. Matched on the stable
         // error class, not the rendered message text.
         case e: org.apache.spark.sql.AnalysisException

@@ -440,15 +440,6 @@ object Multimodal {
         fAggregate(col("emb"), lit(0L), (a, x) => a + x * x).as("nrm2"))
   }
 
-  /** m09's embeddings in the `(vec_id, embedding array<double>)` shape
-    * the Similarity family consumes — the composition bridge
-    * (SemDeDup / ANN over IMAGES), mirroring
-    * [[graft.operators.TextOps.embedFrame]] for text. */
-  def imageEmbedFrame(documents: DataFrame, grid: Int = 8): DataFrame =
-    embedImages(encodePng(imageMedia(documents)), grid).toDF()
-      .select(col("doc_id").as("vec_id"),
-        col("emb").cast("array<double>").as("embedding"))
-
   /** q97's embedding frame: the m09 grid vector MEAN-CENTERED, in
     * exact integer arithmetic — `v'_j = g²·v_j − Σv` (scaling by g²
     * instead of dividing the mean keeps every component an integer;

@@ -507,24 +507,17 @@ object Retrieval {
     }
   }
 
-  /** Postings compaction — [[Dedup.compactBandIndex]]'s convention on
-    * the lexical artifact: every [[appendBm25Index]] adds one parquet
-    * file per touched shard, so after N intake batches a serve's
-    * pruned shard read opens O(N) small files (the 100 TB small-files
-    * problem). [[Artifact.compact]] rewrites the postings coalesced per
-    * shard, term-clustered within each shard so a serve's posting-list
-    * read is row-group-contiguous, behind a content-signature check.
-    * Lexicon/stats don't accumulate (each append rewrites them
-    * wholesale), so postings are the only leg that needs this.
-    * Offline-maintenance contract: quiesce appends/serves first.
-    * Returns (files_before, files_after). */
+  /** Postings compaction through [[Artifact.compact]]: every
+    * [[appendBm25Index]] adds one file per touched shard; the rewrite is
+    * term-clustered per shard so a serve's posting-list read is
+    * row-group-contiguous. Lexicon/stats are rewritten whole by every
+    * append, so postings are the only leg that needs this. */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-                       path: String,
-                       maxRecordsPerFile: Long = 0L): (Long, Long) = {
+                       path: String): (Long, Long) = {
     // stamp-validate before touching anything; the epoch cross-check
     // also guarantees no orphan postings ride into the rewrite
     val idx = readBm25Index(spark, path)
-    Artifact.compact(spark, Bm25, path, idx.epoch, Seq("term", "doc_id"), maxRecordsPerFile)
+    Artifact.compact(spark, Bm25, path, idx.epoch, Seq("term", "doc_id"))
   }
 
   /** Serve a query batch `(query_id, text)` against a persisted index:

@@ -607,14 +607,12 @@ object Similarity {
     * self-contained for the DuckDB oracle, which replays training
     * in-SQL regardless. Entries are KB-scale driver arrays (the q46
     * collect rationale), bounded by the distinct (corpus, geometry)
-    * pairs a session touches. `SPARK_GRAFT_NO_TRAIN_CACHE=1`
-    * bypasses it (A/B probes of the un-cached cost). */
+    * pairs a session touches. */
   private val trainCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   private def cachedTrain[T <: AnyRef](key: String)(train: => T): T =
-    if (sys.env.get("SPARK_GRAFT_NO_TRAIN_CACHE").contains("1")) train
-    else trainCache.computeIfAbsent(key, _ => train).asInstanceOf[T]
+    trainCache.computeIfAbsent(key, _ => train).asInstanceOf[T]
 
   /** Deterministic content digest of a training corpus: row count +
     * an order-independent sum of per-row xxhash64 over (vec_id, v).
@@ -1749,23 +1747,17 @@ object Similarity {
     }
   }
 
-  /** Codes compaction — [[graft.operators.Retrieval.compactBm25Index]]'s
-    * sibling on the ANN artifact: every [[appendAnnIndex]] adds one
-    * parquet file per touched cell, so after N intake batches a
-    * serve's pruned cell read opens O(N) small files.
-    * [[Artifact.compact]] rewrites the codes coalesced per cell,
-    * vec_id-clustered within each cell, behind a content-signature
-    * check. Centroids/codebook/stats never accumulate (one write each),
-    * so codes are the only leg that needs this. Offline-maintenance
-    * contract: quiesce appends/serves first. Returns (files_before,
-    * files_after). */
+  /** Codes compaction through [[Artifact.compact]]: every
+    * [[appendAnnIndex]] adds one file per touched cell; the rewrite is
+    * vec_id-clustered per cell. Centroids/codebook/stats never
+    * accumulate (one write each), so codes are the only leg that needs
+    * this. */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      maxRecordsPerFile: Long = 0L): (Long, Long) = {
+                      path: String): (Long, Long) = {
     // stamp-validate before touching anything; the epoch cross-check
     // also guarantees no orphan codes ride into the rewrite
     val idx = readAnnIndex(spark, path)
-    Artifact.compact(spark, Ann, path, idx.epoch, Seq("vec_id"), maxRecordsPerFile)
+    Artifact.compact(spark, Ann, path, idx.epoch, Seq("vec_id"))
   }
 
   /** Serve a query set against a persisted index: probes from the
@@ -1942,43 +1934,20 @@ object Similarity {
       Seq(path), SemMeta(dim, centStamp(cents), None))
   }
 
-  /** Compact an append-grown semantic store in place —
-    * [[graft.operators.Dedup.compactBandIndex]]'s contract for the
-    * vector store: each admitted batch leaves one small parquet file
-    * per touched cell directory, so after N batches a probe's pruned
-    * scan still opens O(N) files per probed cell. Rewrites to one
-    * sorted file per cell (clustered by vec_id) via the shared
-    * crash-safe rewrite→validate→swap choreography (quiesce admits
-    * first — offline maintenance, like any table OPTIMIZE). Exact
-    * duplicate rows from an at-least-once replayed admit collapse
-    * (distinct over the full row — same vector, same stamps);
-    * validation re-reads the rewrite under the same centroid table
-    * and compares distinct row counts, aborting with the live store
-    * untouched on any loss. Returns (files_before, files_after). */
+  /** Compact an append-grown semantic store (one small file per
+    * admitted batch per touched cell) through [[Artifact.compactRows]]:
+    * one vec_id-clustered file per cell holding the DISTINCT validated
+    * rows, re-stamped — a replayed at-least-once admit's exact
+    * duplicates (same vector, same stamps) collapse. */
   def compactSemanticStore(spark: org.apache.spark.sql.SparkSession,
                            path: String,
-                           cents: Array[(Long, Array[Double])],
-                           maxRecordsPerFile: Long = 0L): (Long, Long) = {
+                           cents: Array[(Long, Array[Double])]): (Long, Long) = {
     val store = readSemanticStore(spark, path, cents)
     Artifact.invalidate(semCacheKey(path)) // rewrite in flight
-    Artifact.swap(spark, path, what = "semantic store")(
-      tmp =>
-        store.distinct()
-          .select(col("cell"), col("vec_id"), col("v"), col("nrm2"),
-            lit(cents.head._2.length).as("_p_dim"),
-            lit(centStamp(cents)).as("_p_cent"))
-          .repartition(col("cell"))
-          .sortWithinPartitions("vec_id")
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-          .partitionBy("cell").parquet(tmp)
-    ) { tmp =>
-      val wantRows = store.distinct().count()
-      val gotRows = readSemanticStore(spark, tmp, cents).distinct().count()
-      require(gotRows == wantRows,
-        s"compaction of $path would lose rows ($wantRows distinct before, " +
-          s"$gotRows after) — aborting with the live store untouched")
-    }
+    Artifact.compactRows(spark, path, "semantic store",
+      store.distinct().select(col("cell"), col("vec_id"), col("v"), col("nrm2"),
+        lit(cents.head._2.length).as("_p_dim"), lit(centStamp(cents)).as("_p_cent")),
+      Seq("cell"), Seq("vec_id"))
   }
 
   /** Validated semantic-store state — the [[Artifact]] payload

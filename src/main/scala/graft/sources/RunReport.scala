@@ -124,18 +124,15 @@ object RunReport {
   private def dataFiles(spark: SparkSession, path: String): Map[String, Long] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // `listStatus`, not `listFiles`: a located status loads each file's
+    // permissions, which the local FS answers with a process per file
+    def walk(d: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).iterator.flatMap(st => if (st.isDirectory) walk(st.getPath) else Iterator(st))
     if (!fs.exists(p)) Map.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val out = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith("."))
-          out += f.getPath.toString -> f.getLen
-      }
-      out.result()
-    }
+    else walk(p).filter { f =>
+      val name = f.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }.map(f => f.getPath.toString -> f.getLen).toMap
   }
 
   def readReports(spark: SparkSession, reportDir: String): DataFrame =

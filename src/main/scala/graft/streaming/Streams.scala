@@ -720,26 +720,17 @@ object Streams {
     * re-admitted docs — a real re-delivery signal, q45's reading);
     * duplicate band rows only widen candidate sets, which
     * `incrementalProbeIndex`'s distinct collapses. */
-  /** s09's admitted-store read, with its first-batch idiom made
-    * crash-aware: an absent path is an empty admitted set ONLY when it
-    * is genuinely a first batch. An absent live path with a
+  /** s09's admitted-store read: an absent path is an empty admitted
+    * set only when it is genuinely a first batch. An absent path with a
     * `__precompact` sibling is a compaction that crashed between its
-    * two renames (see [[graft.operators.Dedup.compactParquetStore]]);
-    * returning the empty frame there would silently re-admit every
-    * previously-admitted doc — so it fails loudly and directs the
-    * operator to rename the recovery copy back. */
+    * two renames — [[graft.operators.Artifact.parquet]] refuses it with
+    * the rename that recovers it, where an empty frame would silently
+    * re-admit every previously-admitted doc. */
   def readAdmittedStore(sp: SparkSession, admittedDir: String): DataFrame =
-    try sp.read.parquet(admittedDir).select(col("doc_id"), col("text"))
+    try graft.operators.Artifact.parquet(sp, admittedDir).select(col("doc_id"), col("text"))
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "PATH_NOT_FOUND" =>
-        val pre = new org.apache.hadoop.fs.Path(admittedDir + "__precompact")
-        val fs = pre.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        require(!fs.exists(pre),
-          s"admitted store $admittedDir is absent but $pre exists: a " +
-            "compaction crashed mid-swap. Refusing to treat the store " +
-            "as empty (that would re-admit duplicates) — recover by " +
-            s"renaming $pre back to $admittedDir, then restart.")
         import org.apache.spark.sql.types._
         graft.operators.Dedup.emptyTyped(sp,
           StructType(Seq(StructField("doc_id", LongType),

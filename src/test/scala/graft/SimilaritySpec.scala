@@ -1360,4 +1360,23 @@ class SimilaritySpec extends SparkSpec {
     plan should not include "Exchange"     // the whole point of the kernel
     plan should not include "Join"         // codebook rides as constants
   }
+
+  test("cell-argmax and pq-encode kernels refuse a zero or NaN centroid norm, naming the cell") {
+    import graft.functions.Exprs
+    // a zero-norm cell scores NaN, and the strict `>` argmax would
+    // silently never select it
+    val cents = Array(Array(1.0, 0.0), Array(0.0, 0.0))
+    Seq(0.0, Double.NaN).foreach { bad =>
+      val cnorms = Array(1.0, bad)
+      val e1 = intercept[IllegalArgumentException](
+        Exprs.cellArgmax(col("v"), Array(3L, 7L), cents, cnorms))
+      e1.getMessage should include("cell 7")
+      val e2 = intercept[IllegalArgumentException](
+        Exprs.pqEncodeVec(col("v"), Array(3L, 7L), cents, cnorms,
+          c2c = Array(1.0, 0.0), bookCv = Array(Array(1.0, 0.0)), bookC2 = Array(1.0),
+          ccf = Array.empty, m = 1, ks = 1, dsub = 2, residual = false,
+          withError = false))
+      e2.getMessage should include("cell 7")
+    }
+  }
 }
