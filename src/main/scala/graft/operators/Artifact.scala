@@ -379,7 +379,9 @@ private[graft] object Artifact {
     * count files (a `listStatus` walk, see [[partitions]]), write to
     * `<path>__compacting`, run the caller's validation against it, then
     * rename the live tree to `<path>__precompact`, the rewrite to
-    * `path`, and delete the old tree. A crash before the renames leaves the live tree untouched;
+    * `path`, and delete the old tree. A refused rewrite (the validation
+    * threw) is deleted before the error rethrows. A crash before the
+    * renames leaves the live tree untouched;
     * between them, `<path>__precompact` is the only copy (rename it
     * back; [[parquet]] and [[recovery]] say so). Returns (files_before,
     * files_after). */
@@ -395,7 +397,8 @@ private[graft] object Artifact {
     val old = s"${path}__precompact"
     fs.delete(new Path(tmp), true); fs.delete(new Path(old), true)
     writeTo(tmp)
-    validateTmp(tmp)
+    // a refused rewrite is a full copy of the store: drop it now
+    try validateTmp(tmp) catch { case e: Throwable => fs.delete(new Path(tmp), true); throw e }
     require(fs.rename(new Path(path), new Path(old)),
       s"could not move live $what aside ($path -> $old)")
     require(fs.rename(new Path(tmp), new Path(path)),

@@ -8,9 +8,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (glue_batch_job.py:147-209) re-expressed as a library.
   *
   * Differences from the reference, by design:
-  *  - No manifest round-trip through a driver-side JSON fetch: the file
-  *    list is just the read path(s); Spark's file source parallelizes the
-  *    listing.
+  *  - The manifest round-trip is optional: the file list is just the
+  *    read path(s), and Spark's file source parallelizes the listing.
+  *    [[readManifest]] replays a reference manifest on the driver.
   *  - No `df.cache(); df.count()` double-scan to size the output —
   *    callers pass a target partition count (computed from input bytes,
   *    see Analytics.outputSizing) and we `repartition` once.
@@ -36,21 +36,30 @@ object Ingest {
     * [[readNdjson]] (or any reader).
     *
     * A manifest is KB-sized job METADATA (one path per landed file),
-    * so it is read as a whole-file JSON document with an explicit
-    * schema (no inference pass) and collected to the driver — the same
-    * index-metadata exception the ANN centroids use, not a data scan.
-    * An unparseable or wrong-shape manifest fails loudly: a manifest
-    * that reads as zero files would silently skip the whole batch. */
+    * so it is opened through the Hadoop FileSystem and parsed on the
+    * driver with Jackson — no Spark job. It accepts what the multiLine
+    * JSON reader accepts for this shape: one manifest object, or a
+    * top-level array of them, with `fileLocations[].URIPrefixes[]`
+    * strings. An unparseable or wrong-shape manifest fails loudly: a
+    * manifest that reads as zero files would silently skip the whole
+    * batch. */
   def readManifest(spark: SparkSession, manifestPath: String): Seq[String] = {
-    import org.apache.spark.sql.types.ArrayType
-    val manifestSchema = StructType(Seq(
-      StructField("fileLocations", ArrayType(StructType(Seq(
-        StructField("URIPrefixes", ArrayType(StringType))))))))
-    val paths = spark.read.schema(manifestSchema)
-      .option("multiLine", "true").json(manifestPath)
-      .select(explode(col("fileLocations")).as("loc"))
-      .select(explode(col("loc.URIPrefixes")).as("uri"))
-      .collect().map(_.getString(0)).toSeq
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    import scala.jdk.CollectionConverters._
+    val p = new org.apache.hadoop.fs.Path(manifestPath)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    // an empty file parses as a missing node, malformed JSON as nothing
+    val root = try Option(new ObjectMapper().readTree(in)) catch {
+      case _: com.fasterxml.jackson.core.JsonProcessingException => None
+    } finally in.close()
+    def elems(n: JsonNode): Iterator[JsonNode] =
+      if (n != null && n.isArray) n.elements.asScala else Iterator.empty
+    // a non-string URI reads as its JSON text, as the StringType reader does
+    val paths = root.iterator.flatMap(r => if (r.isArray) elems(r) else Iterator(r))
+      .flatMap(m => elems(m.get("fileLocations")))
+      .flatMap(loc => elems(loc.get("URIPrefixes")))
+      .map(u => if (u.isNull) null else if (u.isTextual) u.asText else u.toString)
+      .toSeq
     require(paths.nonEmpty && paths.forall(_ != null),
       s"manifest at $manifestPath holds no file URIs — not a " +
         "fileLocations/URIPrefixes manifest, or an empty batch that " +

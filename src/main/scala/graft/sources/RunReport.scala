@@ -2,7 +2,9 @@ package graft.sources
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftShim, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 /** Per-run processing reports — the reference pipeline's self-describing
@@ -29,6 +31,11 @@ import org.apache.spark.sql.functions._
   *    of hourly runs is <10k rows. Querying it is driver-trivial, so
   *    the analytics path reuses the ordinary event-log operators
   *    unchanged.
+  *  - Bookkeeping runs on the driver with no Spark job: the report row
+  *    is written by Spark's parquet writer on the driver ([[emit]]),
+  *    [[readReports]] takes its schema from one footer, and
+  *    [[emitJsonLog]] renders with the `to_json` generator. A reported
+  *    write pays only for the job that writes its data.
   */
 object RunReport {
 
@@ -54,6 +61,9 @@ object RunReport {
       error_message: Option[String],
       report_version: String,
       environment: String)
+
+  // serializes a Run on the driver; one serializer per call (they are not thread-safe)
+  private lazy val RunEncoder = ExpressionEncoder[Run]()
 
   /** [[Ingest.writeParquet]] plus a one-row run report appended to
     * `reportDir`. On write failure the FAILED report (with the error
@@ -108,11 +118,29 @@ object RunReport {
 
   /** Append one report row to the report table. One tiny file per run —
     * the same layout as the reference's one-JSON-per-invocation logs;
-    * compact with an ordinary parquet rewrite when the table ages. */
+    * compact with an ordinary parquet rewrite when the table ages.
+    *
+    * Written on the driver through Spark's own parquet writer (the
+    * factory a write task gets, so the session's compression,
+    * timestamp and rebase settings apply as in any Spark write) — a
+    * few hundred bytes do not need a job. Published atomically: the
+    * file is written under a `.`-prefixed name every reader skips and
+    * renamed to a unique `part-` name once closed. */
   private def emit(spark: SparkSession, run: Run, reportDir: String): Unit = {
-    val enc = org.apache.spark.sql.Encoders.product[Run]
-    spark.createDataset(Seq(run))(enc).toDF()
-      .coalesce(1).write.mode(SaveMode.Append).parquet(reportDir)
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val job = Job.getInstance(GraftShim.newHadoopConf(spark))
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, RunEncoder.schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val tmp = new Path(reportDir, s".$name.inprogress")
+    val fs = tmp.getFileSystem(job.getConfiguration)
+    try {
+      val w = factory.newInstance(tmp.toString, RunEncoder.schema, ctx)
+      try w.write(RunEncoder.createSerializer()(run)) finally w.close()
+      require(fs.rename(tmp, new Path(reportDir, name)), s"could not publish run report $tmp")
+    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
   }
 
   /** Length of every data file under `path`, keyed by path
@@ -135,8 +163,10 @@ object RunReport {
     }.map(f => f.getPath.toString -> f.getLen).toMap
   }
 
+  /** The report table, with its schema from one footer read on the
+    * driver ([[graft.operators.Artifact.parquet]]) — no inference job. */
   def readReports(spark: SparkSession, reportDir: String): DataFrame =
-    spark.read.parquet(reportDir)
+    graft.operators.Artifact.parquet(spark, reportDir)
 
   /** The reference's LITERAL log layout, write side: one
     * self-describing JSON document per run under `logsDir/<job_name>/`
@@ -146,14 +176,14 @@ object RunReport {
     * primary report store — columnar stats, pushdown, no per-file
     * schema drift — but consumers still speaking the `logs/`
     * convention get the byte-level round trip here. The document is
-    * rendered by the engine's own JSON writer (`to_json` over the Run
-    * row — the exact serialization [[readJsonLogs]]' reader parses
-    * back), timestamps in UTC ISO-8601; the single small file is
-    * written driver-side (a report row is a few hundred bytes —
-    * running a distributed job to emit it would be the tail wagging
-    * the dog). */
+    * rendered on the driver by the engine's own JSON generator (the one
+    * `to_json` runs, with the same options — the exact serialization
+    * [[readJsonLogs]]' reader parses back), timestamps in UTC
+    * ISO-8601, and the single small file is written driver-side (a
+    * report row is a few hundred bytes — running a distributed job to
+    * emit it would be the tail wagging the dog). */
   def emitJsonLog(spark: SparkSession, run: Run, logsDir: String): Unit = {
-    val enc = org.apache.spark.sql.Encoders.product[Run]
+    import org.apache.spark.sql.catalyst.json.{JacksonGenerator, JSONOptions}
     // timeZone pinned to UTC explicitly: to_json otherwise renders in
     // the SESSION zone, and the documented contract ("timestamps in
     // UTC ISO-8601") must hold for external consumers regardless of
@@ -163,12 +193,13 @@ object RunReport {
     // micros-precision Run, making readJsonLogs diverge from
     // readReports (round-15 advice; today's Runs are ms-precision, but
     // the round trip must not depend on that)
-    val doc = spark.createDataset(Seq(run))(enc).toDF()
-      .select(to_json(struct(col("*")),
-        java.util.Map.of(
-          "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-          "timeZone", "UTC")))
-      .first().getString(0)
+    val opts = new JSONOptions(Map(
+      "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX", "timeZone" -> "UTC"), "UTC")
+    val text = new java.io.CharArrayWriter
+    val gen = new JacksonGenerator(RunEncoder.schema, text, opts)
+    gen.write(RunEncoder.createSerializer()(run))
+    gen.flush()
+    val doc = text.toString
     val dir = new org.apache.hadoop.fs.Path(logsDir, run.job_name)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
@@ -186,13 +217,12 @@ object RunReport {
     * Returns [[readReports]]' exact shape, so [[asEventLog]] and
     * [[registerMetricsTable]] compose unchanged on top of raw logs. */
   def readJsonLogs(spark: SparkSession, logsDir: String): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.product[Run]
-    spark.read.schema(enc.schema)
+    spark.read.schema(RunEncoder.schema)
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .option("timeZone", "UTC") // the write side's pinned zone
       .option("recursiveFileLookup", "true")
       .json(logsDir)
-      .select(enc.schema.fieldNames.map(col).toSeq: _*)
+      .select(RunEncoder.schema.fieldNames.map(col).toSeq: _*)
   }
 
   /** The reference's metrics-table DDL

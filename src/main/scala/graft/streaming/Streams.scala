@@ -726,16 +726,21 @@ object Streams {
     * two renames — [[graft.operators.Artifact.parquet]] refuses it with
     * the rename that recovers it, where an empty frame would silently
     * re-admit every previously-admitted doc. */
-  def readAdmittedStore(sp: SparkSession, admittedDir: String): DataFrame =
-    try graft.operators.Artifact.parquet(sp, admittedDir).select(col("doc_id"), col("text"))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        import org.apache.spark.sql.types._
-        graft.operators.Dedup.emptyTyped(sp,
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("text", StringType))))
+  def readAdmittedStore(sp: SparkSession, admittedDir: String): DataFrame = {
+    val fs = new org.apache.hadoop.fs.Path(admittedDir)
+      .getFileSystem(sp.sparkContext.hadoopConfiguration)
+    // checked here, not caught from Spark: the reader logs a stack
+    // trace for an absent path before it throws
+    if (Seq(admittedDir, s"${admittedDir}__precompact")
+          .exists(d => fs.exists(new org.apache.hadoop.fs.Path(d))))
+      graft.operators.Artifact.parquet(sp, admittedDir).select(col("doc_id"), col("text"))
+    else {
+      import org.apache.spark.sql.types._
+      graft.operators.Dedup.emptyTyped(sp,
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType))))
     }
+  }
 
   def streamIncrementalDedupAdmit(intake: DataFrame, indexPath: String,
                                   existing: DataFrame, admittedDir: String,

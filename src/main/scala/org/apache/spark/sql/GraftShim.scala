@@ -20,4 +20,9 @@ object GraftShim {
                        info: ExpressionInfo,
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(name, info, builder)
+
+  /** The Hadoop configuration a write of this session starts from
+    * (the context's, overlaid with the session's SQL confs). */
+  def newHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConf()
 }

@@ -188,6 +188,8 @@ class CompactionSpec extends SparkSpec {
         intercept[IllegalArgumentException](s.compact(p))
       } finally DropAfterCommit.at = None
       e.getMessage should include("aborting")
+      // the refused rewrite is deleted, not left as a second copy
+      new java.io.File(s"${s.root(p)}__compacting").exists() shouldBe false
       fileRows(s.root(p)) shouldBe before
       s.serve(p) shouldBe want
     }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StringType
 /** NDJSON→Parquet round trip — the reference's core Glue job shape
   * (read file list, stamp lineage, cast-to-string armor, size-targeted
   * parquet write). */
-class IngestSpec extends SparkSpec {
+class IngestSpec extends SparkSpec with graft.operators.JobsDuring {
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -125,6 +125,46 @@ class IngestSpec extends SparkSpec {
     // an empty batch
     val notMf = writeNdjson(dir, "not_a_manifest.json", Seq("""{"foo": 1}"""))
     intercept[IllegalArgumentException] { Ingest.readManifest(spark, notMf) }
+  }
+
+  test("readManifest parses on the driver: no Spark job") {
+    val dir = tmpDir("graft_mf_jobs")
+    val mf = writeNdjson(dir, "batch-0000.json", Seq(
+      """{"fileLocations": [{"URIPrefixes": ["s3://b/x.ndjson"]}, """ +
+        """{"URIPrefixes": ["s3://b/y.ndjson", "s3://b/z.ndjson"]}]}"""))
+    jobsDuring(Ingest.readManifest(spark, mf)) shouldBe
+      (Seq("s3://b/x.ndjson", "s3://b/y.ndjson", "s3://b/z.ndjson"), 0)
+  }
+
+  test("readManifest reads a top-level array of manifest objects") {
+    val dir = tmpDir("graft_mf_array")
+    val mf = writeNdjson(dir, "batch-0000.json", Seq(
+      """[{"fileLocations": [{"URIPrefixes": ["a.ndjson", "b.ndjson"]}]},""",
+      """ {"fileLocations": [{"URIPrefixes": ["c.ndjson"]}]}]"""))
+    Ingest.readManifest(spark, mf) shouldBe Seq("a.ndjson", "b.ndjson", "c.ndjson")
+  }
+
+  test("readManifest refuses a null URI") {
+    val dir = tmpDir("graft_mf_null")
+    val mf = writeNdjson(dir, "batch-0000.json", Seq(
+      """{"fileLocations": [{"URIPrefixes": ["a.ndjson", null]}]}"""))
+    intercept[IllegalArgumentException](Ingest.readManifest(spark, mf))
+      .getMessage should include("holds no file URIs")
+  }
+
+  test("readManifest refuses malformed JSON") {
+    val dir = tmpDir("graft_mf_malformed")
+    val mf = writeNdjson(dir, "batch-0000.json", Seq(
+      """{"fileLocations": [{"URIPrefixes": ["a.ndjson", """))
+    intercept[IllegalArgumentException](Ingest.readManifest(spark, mf))
+      .getMessage should include("holds no file URIs")
+  }
+
+  test("readManifest refuses an empty file") {
+    val dir = tmpDir("graft_mf_empty")
+    val mf = writeNdjson(dir, "batch-0000.json", Nil)
+    intercept[IllegalArgumentException](Ingest.readManifest(spark, mf))
+      .getMessage should include("holds no file URIs")
   }
 
   test("writeManifests batches and round-trips through readManifest exactly") {

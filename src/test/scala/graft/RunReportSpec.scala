@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Analytics
-import graft.sources.RunReport
+import graft.sources.{Ingest, RunReport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * logs (lambda/glue report sections, queried by Athena.sql:104-176) as
   * a Spark sink wrapper: metric correctness, the failure path, the
   * event-log adapter feeding q05–q08, and the streaming per-batch form. */
-class RunReportSpec extends SparkSpec {
+class RunReportSpec extends SparkSpec with graft.operators.JobsDuring {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -90,6 +90,75 @@ class RunReportSpec extends SparkSpec {
     Analytics.failedEvents(
       RunReport.asEventLog(RunReport.readJsonLogs(spark, s"$dir/logs")))
       .count() shouldBe 0L
+  }
+
+  test("q56 reportedWrite runs exactly the jobs of its data write") {
+    val dir = tmp("graft_rr_jobs")
+    // the same data write, bare, into a fresh root
+    val (_, dataJobs) = jobsDuring(Ingest.writeParquet(tables.documents, s"$dir/bare", 2))
+    jobsDuring(RunReport.reportedWrite(
+      tables.documents, s"$dir/out", 2, "jobs_probe", s"$dir/reports"))._2 shouldBe dataJobs
+  }
+
+  test("q56 readReports runs no job before an action; emitJsonLog runs none") {
+    val dir = tmp("graft_rr_readjobs")
+    val run = RunReport.reportedWrite(
+      tables.documents, s"$dir/out", 2, "jobs_probe", s"$dir/reports")
+    val (reports, readJobs) = jobsDuring(RunReport.readReports(spark, s"$dir/reports"))
+    val (_, logJobs) = jobsDuring(RunReport.emitJsonLog(spark, run, s"$dir/logs"))
+    (readJobs, logJobs) shouldBe (0, 0)
+    reports.count() shouldBe 1L
+  }
+
+  test("q56 a driver-emitted report reads back like a Spark-written one: SUCCESS and FAILED, null error_message") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val dir = tmp("graft_rr_parity")
+    RunReport.reportedWrite(tables.documents, s"$dir/o1", 2, "ok_job", s"$dir/emitted")
+    intercept[Exception] {
+      RunReport.reportedWrite(tables.documents.withColumn("x", expr("raise_error('dead')")),
+        s"$dir/o2", 2, "bad_job", s"$dir/emitted")
+    }
+    val enc = org.apache.spark.sql.Encoders.product[RunReport.Run]
+    val runs = spark.read.parquet(s"$dir/emitted").as(enc).collect().sortBy(_.job_name)
+    runs.map(r => (r.job_name, r.status, r.error_message.isDefined)) shouldBe
+      Array(("bad_job", "FAILED", true), ("ok_job", "SUCCESS", false))
+    // the same runs through a distributed parquet write
+    spark.createDataset(runs.toSeq)(enc).toDF().coalesce(1)
+      .write.parquet(s"$dir/written")
+    val emitted = RunReport.readReports(spark, s"$dir/emitted")
+    val written = RunReport.readReports(spark, s"$dir/written")
+    emitted.schema shouldBe written.schema
+    spark.read.parquet(s"$dir/emitted").schema shouldBe spark.read.parquet(s"$dir/written").schema
+    emitted.collect().map(_.toSeq).toSet shouldBe written.collect().map(_.toSeq).toSet
+    // file level: one parquet schema, one Spark row schema, one codec
+    def footers(d: String) = new java.io.File(d).listFiles().filter(_.getName.startsWith("part-"))
+      .map { f =>
+        val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toString),
+          spark.sparkContext.hadoopConfiguration)
+        val r = ParquetFileReader.open(in)
+        try {
+          val m = r.getFooter
+          (m.getFileMetaData.getSchema.toString,
+            m.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"),
+            m.getBlocks.get(0).getColumns.get(0).getCodec.toString)
+        } finally r.close()
+      }.toSet
+    footers(s"$dir/emitted") shouldBe footers(s"$dir/written")
+  }
+
+  test("q56 an in-progress report file is invisible to readReports") {
+    val dir = tmp("graft_rr_inprogress")
+    RunReport.reportedWrite(tables.documents, s"$dir/out", 2, "job", s"$dir/reports")
+    val part = new java.io.File(s"$dir/reports").listFiles()
+      .find(_.getName.startsWith("part-")).get.toPath
+    // a whole report and a torn one, both under hidden in-progress names
+    Files.copy(part, part.resolveSibling(s".${part.getFileName}.inprogress"))
+    Files.write(part.resolveSibling(".part-torn-c000.snappy.parquet.inprogress"),
+      "PAR1 torn".getBytes("UTF-8"))
+    val back = RunReport.readReports(spark, s"$dir/reports")
+    back.count() shouldBe 1L
+    back.collect().head.getAs[String]("job_name") shouldBe "job"
   }
 
   test("q103 measured rates calibrate the cost projection from REAL run history") {

@@ -892,6 +892,27 @@ class StreamingSpec extends SparkSpec {
     admitted shouldBe Set(10L, 22L)
   }
 
+  test("s09 first batch: an absent admitted store reads empty, with no reader warning logged") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val absent = java.nio.file.Files.createTempDirectory("s09absent_").toString + "/admitted"
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("s09-absent-store", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    val store = try Streams.readAdmittedStore(spark, absent) finally root.removeAppender(capture)
+    store.count() shouldBe 0L
+    store.schema.fieldNames shouldBe Array("doc_id", "text")
+    logged.asScala.filter(_.contains(absent)) shouldBe empty
+  }
+
   test("s09 admit -> compact both stores -> probe: the loop continues unchanged") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
